@@ -6,8 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 /** Optimization-round companion bench (guide §1): times the SAME gate
   * queries as [[Bench]] in the SAME session shape (local-cluster executor
   * JVMs, identical confs), but adds the diagnostics the frozen bench
-  * cannot: per-gate Spark job/stage/task counts and shuffle bytes (the
-  * fixed-overhead profile that dominates at sf0.1), optional repeats, an
+  * cannot: per-gate Spark job/stage/task counts, shuffle bytes and
+  * driver-side codegen compiles and compile ms (the fixed-overhead profile
+  * that dominates at sf0.1), optional repeats, an
   * optional gate-name filter, and optional `.explain("formatted")` dumps
   * for the plans/ deliverable. Never used for the numbers of record —
   * BENCH_rNN.json stays the driver's run of [[Bench]].
@@ -113,13 +114,22 @@ object BenchExtra {
 
     val gates = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.forall(_.contains(n)) }
+    // codegen runs in this JVM's planner; executor JVMs recompile the same
+    // sources through their own caches and are not counted here
+    def codegen: (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
     val results = gates.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
       val samples = (1 to repeats).map { _ =>
         jobs.set(0); stages.set(0); tasks.set(0); shufW.set(0)
+        val (cg0, cgNs0) = codegen
         val dt = timedOrNeg(fn(spark, sfDir).count())
+        val (cg1, cgNs1) = codegen
         graft.ops.OpScratch.release()
-        (dt, jobs.get, stages.get, tasks.get, shufW.get)
+        (dt, jobs.get, stages.get, tasks.get, shufW.get, cg1 - cg0,
+          (cgNs1 - cgNs0) / 1e6)
       }
       plansDir.foreach { dir =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -138,8 +148,8 @@ object BenchExtra {
 
     val qs = results.map { case (k, ss) =>
       val times = ss.map(_._1)
-      val (_, j, st, tk, sw) = ss.head
-      f""""$k":{"sec":${times.head}%.3f,"min_sec":${times.min}%.3f,"jobs":$j,"stages":$st,"tasks":$tk,"shuffle_mb":${sw / 1e6}%.1f}"""
+      val (_, j, st, tk, sw, cg, cgMs) = ss.head
+      f""""$k":{"sec":${times.head}%.3f,"min_sec":${times.min}%.3f,"jobs":$j,"stages":$st,"tasks":$tk,"compiles":$cg,"compile_ms":$cgMs%.1f,"shuffle_mb":${sw / 1e6}%.1f}"""
     }.mkString("{", ",", "}")
     val total = results.map(_._2.head._1).filter(_ >= 0).sum
     val json = f"""{"metric":"benchx_total","value":$total%.3f,"unit":"sec","sf":"$sfDir","repeats":$repeats,"gates":$qs}"""

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model._
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.util.control.NonFatal
 
 /** Persistent index layout + staged, resumable build.
   *
@@ -812,7 +813,7 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(f =>
       f.isDirectory && f.getPath.getName.startsWith("tb="))
-  } catch { case _: Throwable => termstatsDf.columns.contains("tb") }
+  } catch { case NonFatal(_) => termstatsDf.columns.contains("tb") }
   lazy val segmentsDf: DataFrame = spark.read.parquet(s"$dir/segments")
   /** docId → (url, text, lang); docId-sorted files, so docId range
     * filters prune row groups. The serving path (snippets) joins top-k
@@ -907,7 +908,7 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
       } // a missing partition dir just means no terms hash there
       tbLoaded.add(tb)
       true
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
   }
 
   def termStat(term: String, field: String): (Long, Long) =

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 import graft.index.SearchIndex
+import graft.query.expressions.{DoubleParam, QueryExpressions}
 
 /** Query evaluation: lowers the parsed AST to declarative DataFrame plans.
   *
@@ -12,8 +14,9 @@ import graft.index.SearchIndex
   * single-threaded list merges) to Spark relational ops — semantics proven
   * equivalent in the test oracle suite:
   *
-  *  - leaf scan  → postings point-lookup + score column (codegen arithmetic,
-  *    per-term df/cf folded in as literals)
+  *  - leaf scan  → postings point-lookup + score column (codegen arithmetic;
+  *    per-query doubles enter as DoubleParams, so queries of one shape
+  *    share their generated classes)
   *  - Boolean AND (min score, intersection;
   *    yairs/retrieval/BooleanRetriever.scala:150-188) →
   *    union + groupBy(docId) + min(score) having count == nChildren
@@ -78,13 +81,6 @@ class Engine(val index: SearchIndex, val model: Model,
   private def emptyLowered: Lowered =
     Lowered(spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], postingsSchema), 0.0)
-
-  /** Positional kernels as native Catalyst expressions (no UDF SerDe;
-    * codegen via static-call doGenCode) — registered per session,
-    * referenced through expr(). Semantics pinned by PositionalSpec.
-    */
-  private def ensurePositionalFns(): Unit =
-    graft.query.expressions.PositionalExpressions.register(spark)
 
   // ---------------------------------------------------------------- leaves
 
@@ -151,11 +147,12 @@ class Engine(val index: SearchIndex, val model: Model,
     val merged = if (allFinite) {
       val parts = children.zip(weights).map { case (c, w) =>
         c.df.select(col("docId"),
-          ((col("score") - lit(c.default)) * lit(w)).as("contrib"))
+          ((col("score") - DoubleParam.column(c.default)) * DoubleParam.column(w))
+            .as("contrib"))
       }
       parts.reduce(_ union _)
         .groupBy("docId")
-        .agg((sum("contrib") + lit(combined)).as("score"))
+        .agg((sum("contrib") + DoubleParam.column(combined)).as("score"))
     } else {
       val ws = weights.toArray
       val ds = children.map(_.default).toArray
@@ -217,7 +214,6 @@ class Engine(val index: SearchIndex, val model: Model,
   private def near(children: Seq[Lowered], k: Int): Lowered = {
     if (children.length == 1) return children.head // fold pass-through
                                                    // (StructuredRetriever.scala:58-67)
-    ensurePositionalFns()
     val matched = children.reduceLeft { (l, r) =>
       val left = l.df.select(col("docId"), col("dl"),
         col("positions").as("pos1"))
@@ -246,7 +242,6 @@ class Engine(val index: SearchIndex, val model: Model,
           col("positions")))).as("lists"))
       .filter(col("cnt") === n) // doc must appear in ALL lists
                                 // (MultimergeSturcturedRetriever.scala:117)
-    ensurePositionalFns()
     val matched = gathered.select(
       col("docId"),
       expr(s"uw_matches(transform(lists, x -> x.positions), $k)").as("tf"),
@@ -268,6 +263,7 @@ class Engine(val index: SearchIndex, val model: Model,
     * referenced more than once is persisted so the scan runs once.
     */
   def lower(node: QNode): Lowered = {
+    QueryExpressions.prepare(spark)
     val counts = collectLeaves(node).groupBy(identity).view.mapValues(_.size)
     val memo = scala.collection.mutable.HashMap.empty[(String, String), Lowered]
     def rec(n: QNode): Lowered = n match {
@@ -394,7 +390,7 @@ class Engine(val index: SearchIndex, val model: Model,
     // its own named query, not as a batch-wide prefetch failure.
     index.prefetchStats(queries.flatMap { case (_, q) =>
       try collectLeaves(parser.parse(q))
-      catch { case _: Throwable => Nil } })
+      catch { case NonFatal(_) => Nil } })
     def rowsOf(qid: String, q: String): Seq[graft.model.TrecResult] =
       search(q, numResults, parser).collect().toSeq.map { r =>
         graft.model.TrecResult(qid, r.getAs[Long]("docId"),

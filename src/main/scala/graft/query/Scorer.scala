@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.model.CollStats
+import graft.query.expressions.DoubleParam
 
 /** Retrieval models. Parameter defaults are the reference baselines
   * (reference: conf/bm25.properties:32-35, conf/indri.properties:24-28).
@@ -43,23 +44,30 @@ class Scorer(val model: Model, val stats: CollStats) extends Serializable {
     case Indri(lambda, mu, wordBased) =>
       val prior = if (wordBased) cf / totalWords else df / n
       val w = lambda * (tf + mu * prior) / (dl + mu) + (1 - lambda) * prior
-      if (w == 0.0) Integer.MIN_VALUE.toDouble else math.log10(w)
+      // StrictMath: the log10 Spark's column evaluates (Math.log10 may be
+      // an intrinsic that differs in the last bit)
+      if (w == 0.0) Integer.MIN_VALUE.toDouble else StrictMath.log10(w)
     case Bool(_) => tf.toDouble
   }
 
-  /** Same formula as a column over (tf, dl); cf/df folded in as literals
-    * (they are per-term scalars resolved from the stats table).
+  /** Same formula as a column over (tf, dl), bit-identical to
+    * [[termScore]]: the same double operations in the same order. The
+    * per-term doubles derived from cf/df (BM25 idf, Indri's μ·prior and
+    * (1−λ)·prior) enter as [[DoubleParam]]s, not literals, so every term
+    * shares one generated class; per-store constants stay literals. The
+    * session must be [[graft.query.expressions.QueryExpressions.prepare]]d.
     */
   def termScoreCol(cf: Long, df: Long, tf: Column, dl: Column): Column =
     model match {
       case BM25(k1, b) =>
         val idf = math.log10((n - df + 0.5) / (df + 0.5))
-        lit(idf) * tf.cast("double") /
-          (tf.cast("double") + lit(k1) * (lit(1 - b) + lit(b / avgdl) * dl.cast("double")))
+        DoubleParam.column(idf) * tf.cast("double") /
+          (tf.cast("double") + lit(k1) *
+            (lit(1 - b) + lit(b) * dl.cast("double") / lit(avgdl)))
       case Indri(lambda, mu, wordBased) =>
         val prior = if (wordBased) cf / totalWords else df / n
-        val w = lit(lambda) * (tf.cast("double") + lit(mu * prior)) /
-          (dl.cast("double") + lit(mu)) + lit((1 - lambda) * prior)
+        val w = lit(lambda) * (tf.cast("double") + DoubleParam.column(mu * prior)) /
+          (dl.cast("double") + lit(mu)) + DoubleParam.column((1 - lambda) * prior)
         when(w === 0.0, lit(Integer.MIN_VALUE.toDouble)).otherwise(log10(w))
       case Bool(_) => tf.cast("double")
     }
