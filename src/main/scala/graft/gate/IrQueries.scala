@@ -170,11 +170,9 @@ WHERE rank <= 20""")),
             .select(lit(t).as("qid"), col("docId").as("doc_id"),
               col("rank"), col("score"))
         }.reduce(_ union _)
-        val qrels = terms.map { t =>
-          idx.postings(t, "default")
-            .select(lit(t).as("qid"), col("docId").as("doc_id"),
-              (col("tf") >= 2).cast("int").as("rel"))
-        }.reduce(_ union _)
+        val qrels = idx.postings(terms.map(_ -> "default"))
+          .select(col("term").as("qid"), col("docId").as("doc_id"),
+            (col("tf") >= 2).cast("int").as("rel"))
         graft.ops.TrecEval.evaluate(run, qrels)
           .select(col("qid"), col("num_ret"), col("num_rel"),
             col("num_rel_ret"),

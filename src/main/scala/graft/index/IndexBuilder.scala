@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Tokenizer
 import graft.model._
+import graft.query.expressions.{InValues, QueryExpressions}
 
 /** One (docId, field, text) unit to index. A document contributes one row
   * per field (default/title/body/url — reference field layout:
@@ -329,11 +330,19 @@ trait SearchIndex {
     */
   def prefetchStats(pairs: Seq[(String, String)]): Unit = ()
 
-  /** Postings of (term, field): columns docId:long, tf:int, dl:int,
-    * positions:array<int>. A missing term yields an empty frame, not an
-    * error (reference: yairs/model/InvertedList.scala:156-159).
+  /** Postings of a batch of (term, field) pairs, read in one pass:
+    * columns term:string, field:string, docId:long, tf:int, dl:int,
+    * positions:array<int>. A missing pair yields no rows, not an error
+    * (reference: yairs/model/InvertedList.scala:156-159). The Engine reads
+    * the leaf children of one query node with one such call.
     */
-  def postings(term: String, field: String): DataFrame
+  def postings(pairs: Seq[(String, String)]): DataFrame
+
+  /** Postings of one (term, field), read through the batch form: columns
+    * docId, tf, dl, positions.
+    */
+  final def postings(term: String, field: String): DataFrame =
+    postings(Seq(term -> field)).select("docId", "tf", "dl", "positions")
 
   /** (df, cf) of a (term, field); (0, 0) when absent. */
   def termStat(term: String, field: String): (Long, Long)
@@ -363,9 +372,14 @@ class DfIndex(val postingsDf: DataFrame, val termStatsDf: DataFrame,
     missing.foreach(p => statCache.put(p, found.getOrElse(p, (0L, 0L))))
   }
 
-  def postings(term: String, field: String): DataFrame =
-    postingsDf.filter(col("term") === term && col("field") === field)
-      .select("docId", "tf", "dl", "positions")
+  def postings(pairs: Seq[(String, String)]): DataFrame = {
+    QueryExpressions.prepare(postingsDf.sparkSession)
+    val ps = pairs.distinct
+    // the term set first: it rejects most rows before the pair check
+    postingsDf.filter(InValues.column(col("term"), ps.map(_._1).distinct) &&
+      InValues.column(struct(col("term"), col("field")), ps))
+      .select("term", "field", "docId", "tf", "dl", "positions")
+  }
 
   def termStat(term: String, field: String): (Long, Long) =
     statCache.getOrElseUpdate((term, field), {

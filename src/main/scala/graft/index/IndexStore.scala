@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model._
+import graft.query.expressions.{InValues, QueryExpressions}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 
@@ -571,9 +572,11 @@ object IndexStore {
     import scala.concurrent.ExecutionContext.Implicits.global
 
     val fDocmap = Future { if (!isCommitted(out, "docmap")) {
-      spark.read.parquet(s"$aDir/docmap")
-        .unionByName(spark.read.parquet(s"$bDir/docmap")
-          .withColumn("docId", col("docId") + nA))
+      // by name: a streamed store's docmap also has its batch= partition
+      def docmap(dir: String) =
+        spark.read.parquet(s"$dir/docmap").select("url", "docId", "text", "lang")
+      docmap(aDir)
+        .unionByName(docmap(bDir).withColumn("docId", col("docId") + nA))
         .write.mode(SaveMode.Overwrite)
         .option("parquet.block.size", (16L << 20).toString)
         .parquet(s"$out/docmap")
@@ -825,7 +828,12 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
     scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]
 
   lazy val collStats: CollStats = {
-    val json = Files.readString(Paths.get(dir, "collstats.json"))
+    // through the store path's Hadoop FileSystem, like every other read
+    // here, so a store opened by URI (file://, a cluster FS) works too
+    val p = new org.apache.hadoop.fs.Path(s"$dir/collstats.json")
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
     // tiny fixed-shape JSON; parse the "default" object fields
     def field(name: String, obj: String): String = {
       val m = (s""""$name":\\s*([-0-9.eE]+)""").r.findFirstMatchIn(obj)
@@ -850,16 +858,33 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
       .eval(null).asInstanceOf[Long]
   }
 
-  def segmentsOf(term: String, field: String): DataFrame =
-    segmentsDf.filter(col("field") === field && col("tb") === tbOf(term) &&
-      col("term") === term)
+  /** Segment rows of a batch of (term, field) pairs in one pruned scan:
+    * the (field, tb) directories prune at plan time, the term set pushes
+    * into the parquet reader, and the exact pair set filters the rest.
+    * Every predicate is an [[InValues]] set, so the generated code does
+    * not depend on how many pairs a batch has.
+    */
+  def segmentsOf(pairs: Seq[(String, String)]): DataFrame = {
+    QueryExpressions.prepare(spark)
+    val ps = pairs.distinct
+    segmentsDf.filter(
+      InValues.column(col("field"), ps.map(_._2).distinct) &&
+      InValues.column(col("tb").cast("long"), ps.map(p => tbOf(p._1)).distinct) &&
+      InValues.column(col("term"), ps.map(_._1).distinct) &&
+      InValues.column(struct(col("term"), col("field")), ps))
+  }
 
-  def postings(term: String, field: String): DataFrame = {
+  def segmentsOf(term: String, field: String): DataFrame =
+    segmentsOf(Seq(term -> field))
+
+  def postings(pairs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    segmentsOf(term, field)
-      .select("bucket", "n", "blob").as[(Int, Int, Array[Byte])]
-      .flatMap { case (_, n, blob) => Codec.decode(blob, n) }
-      .toDF("docId", "tf", "dl", "positions")
+    segmentsOf(pairs)
+      .select("term", "field", "n", "blob").as[(String, String, Int, Array[Byte])]
+      .flatMap { case (t, f, n, blob) =>
+        Codec.decode(blob, n).map(p => PostingRow(t, f, p.docId, p.tf, p.dl, p.positions))
+      }
+      .toDF()
   }
 
   /** tb partitions already pulled into `statCache` via the driver-local

@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.model.CollStats
+import graft.model.{CollStats, PostingRow}
 import java.nio.file.{Files, Paths}
 
 /** Interop with the reference's text `.inv` index format, so an index
@@ -99,24 +99,26 @@ class InvIndex(spark: SparkSession, basename: String,
       }
     })
 
-  /** Distributed parse of one list's posting lines (header skipped in the
+  /** Distributed parse of each pair's list file (header skipped in the
     * first split only — the file may be larger than one split for head
-    * terms).
+    * terms); one `.inv` file per pair, so the batch is their union.
     */
-  def postings(term: String, field: String): DataFrame = {
+  def postings(pairs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    val p = path(term, field)
-    if (!Files.exists(Paths.get(p)))
-      return spark.emptyDataset[(Long, Int, Int, Array[Int])]
-        .toDF("docId", "tf", "dl", "positions")
-    spark.sparkContext.textFile(p)
-      .mapPartitionsWithIndex { (i, it) =>
-        val lines = if (i == 0) it.drop(1) else it
-        lines.filter(_.nonEmpty).map { line =>
-          val parts = line.trim.split(" ")
-          (parts(0).toLong, parts(1).toInt, parts(2).toInt,
-            Array.tabulate(parts.length - 3)(j => parts(j + 3).toInt))
-        }
-      }.toDF("docId", "tf", "dl", "positions")
+    val files = pairs.distinct.map { case (t, f) => (t, f, path(t, f)) }
+      .filter { case (_, _, p) => Files.exists(Paths.get(p)) }
+    files.map { case (term, field, p) =>
+      spark.sparkContext.textFile(p)
+        .mapPartitionsWithIndex { (i, it) =>
+          val lines = if (i == 0) it.drop(1) else it
+          lines.filter(_.nonEmpty).map { line =>
+            val parts = line.trim.split(" ")
+            PostingRow(term, field, parts(0).toLong, parts(1).toInt,
+              parts(2).toInt, Array.tabulate(parts.length - 3)(j => parts(j + 3).toInt))
+          }
+        }.toDS()
+    }.reduceOption(_ union _)
+      .getOrElse(spark.emptyDataset[PostingRow])
+      .toDF()
   }
 }

@@ -14,9 +14,12 @@ import graft.query.expressions.{DoubleParam, QueryExpressions}
   * single-threaded list merges) to Spark relational ops — semantics proven
   * equivalent in the test oracle suite:
   *
-  *  - leaf scan  → postings point-lookup + score column (codegen arithmetic;
-  *    per-query doubles enter as DoubleParams, so queries of one shape
-  *    share their generated classes)
+  *  - leaves → one postings scan per node for all of its leaf children
+  *    (the reference merges a node's lists in one pass too), each row
+  *    tagged with its child index and scored by a codegen'd column; the
+  *    per-query doubles reach generated code through `references` (a
+  *    literal lookup table, DoubleParams), so queries of one shape share
+  *    their generated classes whatever their terms, weights or width
   *  - Boolean AND (min score, intersection;
   *    yairs/retrieval/BooleanRetriever.scala:150-188) →
   *    union + groupBy(docId) + min(score) having count == nChildren
@@ -70,31 +73,86 @@ class Engine(val index: SearchIndex, val model: Model,
     StructField("dl", IntegerType, nullable = false),
     StructField("positions", ArrayType(IntegerType, containsNull = false))))
 
+  private val postingCols = postingsSchema.fieldNames.toSeq.map(col)
+
   /** A lowered query node: scored postings + the node's default score
     * (what an absent doc would contribute under a weighted merge).
     */
   case class Lowered(df: DataFrame, default: Double)
 
+  /** A node's children as one frame of merge input: rows tagged with the
+    * child index `cidx` that carry the child's absent-term default `d` and
+    * weight `w` ([[childrenSchema]]); `defaults` lists every child's
+    * default in child order.
+    */
+  private case class Children(rows: DataFrame, defaults: Seq[Double])
+
+  private val childrenSchema = StructType(
+    postingsSchema.fields.take(1) ++
+    Seq(StructField("cidx", IntegerType, nullable = false)) ++
+    postingsSchema.fields.tail ++
+    Seq(StructField("d", DoubleType, nullable = false),
+      StructField("w", DoubleType, nullable = false)))
+
   private def spark: SparkSession =
     SparkSession.active
 
-  private def emptyLowered: Lowered =
-    Lowered(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], postingsSchema), 0.0)
+  private def emptyOf(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  private def emptyLowered: Lowered = Lowered(emptyOf(postingsSchema), 0.0)
 
   // ---------------------------------------------------------------- leaves
 
-  private def lowerLeaf(leaf: QLeaf): Lowered = {
-    val (df0, cf0) = index.termStat(leaf.term, leaf.field)
-    if (df0 == 0L)
-      return emptyLowered // missing list: empty, defaultScore 0
-                          // (InvertedList.scala:107-110,156-159)
-    val p = index.postings(leaf.term, leaf.field)
-    val scored = p.select(
-      col("docId"),
-      scorer.leafScoreCol(cf0, df0, col("tf"), col("dl")).as("score"),
-      col("tf"), col("dl"), col("positions"))
-    Lowered(scored, scorer.defaultScore(cf0, df0))
+  /** The leaf children (leaf, cidx, weight) of one node from ONE postings
+    * scan: each posting row is matched to its children through a literal
+    * table keyed on (term, field) — exploded, so a leaf listed twice yields
+    * its rows twice — which also carries each child's doubles (score
+    * parameters, default, weight). A literal table reaches generated code
+    * through `references`, so the plan's generated classes do not depend
+    * on the group's terms, values or size. Returns the rows (none when no
+    * leaf has a list) and each leaf's default: a missing list is empty
+    * with defaultScore 0 (InvertedList.scala:107-110,156-159).
+    */
+  private def leafGroup(leaves: Seq[(QLeaf, Int, Double)]): (Option[DataFrame], Seq[Double]) = {
+    val stats = leaves.map { case (l, _, _) => index.termStat(l.term, l.field) }
+    val defaults = stats.map { case (df, cf) =>
+      if (df == 0L) 0.0 else scorer.defaultScore(cf, df) }
+    val table = leaves.zip(stats).zip(defaults).collect {
+      case (((l, i, w), (df, cf)), d) if df > 0L =>
+        val (p1, p2) = scorer.termParams(cf, df)
+        LeafKey(l.term, l.field) -> LeafParams(i, p1, p2, d, w)
+    }.groupMap(_._1)(_._2)
+    if (table.isEmpty) return (None, defaults)
+    val rows = index.postings(table.keys.toSeq.map(k => k.term -> k.field))
+      .select(col("docId"), col("tf"), col("dl"), col("positions"),
+        inline(element_at(typedLit(table), struct(col("term"), col("field")))))
+      .select(col("docId"), col("cidx"),
+        scorer.leafScoreCol((col("p1"), col("p2")), col("tf"), col("dl")).as("score"),
+        col("tf"), col("dl"), col("positions"), col("d"), col("w"))
+    (Some(rows), defaults)
+  }
+
+  /** Lower `kids` (stop leaves already pruned) as merge input: the leaves
+    * as one [[leafGroup]], each inner child lowered and tagged lit(cidx).
+    */
+  private def children(kids: Seq[QNode], weights: Seq[Double]): Children = {
+    val leaves = kids.zipWithIndex.collect { case (l: QLeaf, i) => (l, i, weights(i)) }
+    val (leafRows, leafDefaults) = leafGroup(leaves)
+    val inner = kids.zipWithIndex.collect { case (n: QInner, i) => i -> lowerInner(n) }
+    val parts = leafRows.toSeq ++ inner.map { case (i, lw) =>
+      lw.df.select(col("docId"), lit(i).as("cidx"), col("score"), col("tf"),
+        col("dl"), col("positions"), DoubleParam.column(lw.default).as("d"),
+        DoubleParam.column(weights(i)).as("w"))
+    }
+    val defaults = (leaves.map(_._2).zip(leafDefaults) ++
+      inner.map { case (i, lw) => i -> lw.default }).sortBy(_._1).map(_._2)
+    // The union starts from an empty frame even when the leaf group is the
+    // only part: a Union ends whole-stage codegen, so the scan's class is
+    // shared by every merge operator instead of fused into each one's
+    // aggregation (one class per operator and model, which overflows
+    // Spark's codegen cache on a mixed query stream).
+    Children(parts.foldLeft(emptyOf(childrenSchema))(_ union _), defaults)
   }
 
   // ------------------------------------------------------- merge operators
@@ -107,20 +165,15 @@ class Engine(val index: SearchIndex, val model: Model,
     col("docId"), col("score"), lit(-1).as("tf"), lit(-1).as("dl"),
     array().cast(ArrayType(IntegerType, containsNull = false)).as("positions"))
 
-  private def boolAnd(children: Seq[Lowered]): Lowered = {
-    if (children.length == 1) return children.head
-    val n = children.length
-    val merged = children.map(_.df.select("docId", "score")).reduce(_ union _)
-      .groupBy("docId")
+  private def boolAnd(c: Children): Lowered = {
+    val merged = c.rows.groupBy("docId")
       .agg(min("score").as("score"), count(lit(1)).as("cnt"))
-      .filter(col("cnt") === n).drop("cnt")
+      .filter(col("cnt") === c.defaults.length).drop("cnt")
     Lowered(opaque(merged), 0.0)
   }
 
-  private def boolOr(children: Seq[Lowered]): Lowered = {
-    if (children.length == 1) return children.head
-    val merged = children.map(_.df.select("docId", "score")).reduce(_ union _)
-      .groupBy("docId").agg(max("score").as("score"))
+  private def boolOr(c: Children): Lowered = {
+    val merged = c.rows.groupBy("docId").agg(max("score").as("score"))
     Lowered(opaque(merged), 0.0)
   }
 
@@ -139,23 +192,17 @@ class Engine(val index: SearchIndex, val model: Model,
     * contribute wᵢdᵢ, present ones wᵢsᵢ, NaN stays confined to the docs
     * the reference gives NaN to.
     */
-  private def weightedMerge(children: Seq[Lowered],
-                            weights: Seq[Double]): Lowered = {
-    val combined = children.zip(weights).map { case (c, w) => c.default * w }.sum
-    val allFinite = children.forall(c => java.lang.Double.isFinite(c.default))
+  private def weightedMerge(c: Children, weights: Seq[Double]): Lowered = {
+    val combined = c.defaults.zip(weights).map { case (d, w) => d * w }.sum
+    val allFinite = c.defaults.forall(d => java.lang.Double.isFinite(d))
 
     val merged = if (allFinite) {
-      val parts = children.zip(weights).map { case (c, w) =>
-        c.df.select(col("docId"),
-          ((col("score") - DoubleParam.column(c.default)) * DoubleParam.column(w))
-            .as("contrib"))
-      }
-      parts.reduce(_ union _)
-        .groupBy("docId")
-        .agg((sum("contrib") + DoubleParam.column(combined)).as("score"))
+      c.rows.groupBy("docId")
+        .agg((sum((col("score") - col("d")) * col("w")) +
+          DoubleParam.column(combined)).as("score"))
     } else {
       val ws = weights.toArray
-      val ds = children.map(_.default).toArray
+      val ds = c.defaults.toArray
       val mergeUdf = udf { (cs: Seq[Row]) =>
         val present = new Array[Double](ws.length)
         val has = new Array[Boolean](ws.length)
@@ -172,11 +219,7 @@ class Engine(val index: SearchIndex, val model: Model,
         }
         total
       }
-      val parts = children.zipWithIndex.map { case (c, i) =>
-        c.df.select(col("docId"), lit(i).as("cidx"), col("score"))
-      }
-      parts.reduce(_ union _)
-        .groupBy("docId")
+      c.rows.groupBy("docId")
         .agg(collect_list(struct(col("cidx"), col("score"))).as("cs"))
         .select(col("docId"), mergeUdf(col("cs")).as("score"))
     }
@@ -230,18 +273,14 @@ class Engine(val index: SearchIndex, val model: Model,
     rescoreVirtual(matched, uwEmptyRule = false)
   }
 
-  private def uw(children: Seq[Lowered], k: Int): Lowered = {
-    val n = children.length
-    val parts = children.zipWithIndex.map { case (c, i) =>
-      c.df.select(col("docId"), lit(i).as("cidx"), col("dl"), col("positions"))
-    }
-    val gathered = parts.reduce(_ union _)
+  private def uw(c: Children, k: Int): Lowered = {
+    val gathered = c.rows
       .groupBy("docId")
       .agg(count(lit(1)).as("cnt"),
         sort_array(collect_list(struct(col("cidx"), col("dl"),
           col("positions")))).as("lists"))
-      .filter(col("cnt") === n) // doc must appear in ALL lists
-                                // (MultimergeSturcturedRetriever.scala:117)
+      .filter(col("cnt") === c.defaults.length) // doc must appear in ALL
+                                  // lists (MultimergeSturcturedRetriever.scala:117)
     val matched = gathered.select(
       col("docId"),
       expr(s"uw_matches(transform(lists, x -> x.positions), $k)").as("tf"),
@@ -256,70 +295,68 @@ class Engine(val index: SearchIndex, val model: Model,
 
   // ------------------------------------------------------------- recursion
 
-  /** Lower with per-query leaf memoization: an SDM-shaped query references
-    * each term several times (unigram + NEAR + UW branches); without the
-    * memo every reference is its own postings scan + stat lookup (the
-    * reference re-reads each `.inv` file per reference — SURVEY §4). A leaf
-    * referenced more than once is persisted so the scan runs once.
+  /** Lower a query tree. Every inner node reads its leaf children with one
+    * postings scan ([[leafGroup]]) — the reference merges all of a node's
+    * lists in one pass too (MultimergeSturcturedRetriever.scala:31-87) —
+    * so a flat n-term query plans one scan, not n. A leaf standing alone
+    * (the root, or a #NEAR child, whose join fold takes one list at a
+    * time) is a group of one.
     */
   def lower(node: QNode): Lowered = {
     QueryExpressions.prepare(spark)
-    val counts = collectLeaves(node).groupBy(identity).view.mapValues(_.size)
-    val memo = scala.collection.mutable.HashMap.empty[(String, String), Lowered]
-    def rec(n: QNode): Lowered = n match {
-      case l: QLeaf =>
-        memo.getOrElseUpdate((l.term, l.field), {
-          val lw = lowerLeaf(l)
-          if (counts.getOrElse((l.term, l.field), 1) > 1) {
-            val p = lw.df.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            pinned.add(p)
-            Lowered(p, lw.default)
-          } else lw
-        })
-      case inner: QInner => lowerInner(inner, rec)
-    }
-    rec(node)
+    lowerNode(node)
   }
 
-  private def lowerInner(node: QInner, rec: QNode => Lowered): Lowered = {
-    val op = node.op
-    val prox = node.prox
-    val weights = node.weights
+  private def lowerNode(node: QNode): Lowered = node match {
+    case l: QLeaf =>
+      // a group of one feeds a #NEAR join or the ranking, not a merge: no
+      // union, so the planner still sees the scan's size and can
+      // broadcast it into the join
+      val (rows, defaults) = leafGroup(Seq((l, 0, 1.0)))
+      rows.fold(emptyLowered)(r => Lowered(r.select(postingCols: _*), defaults.head))
+    case inner: QInner => lowerInner(inner)
+  }
+
+  private def lowerInner(node: QInner): Lowered = {
     // stop-leaf children pruned at evaluation, not parse
     // (StructuredRetriever.scala:29-33)
     val kept = node.children.filterNot(_.isStopLeaf)
-    if (kept.isEmpty) emptyLowered
-    else {
-      val lowered = kept.map(rec)
-      op match {
-        case QOp.OR => model match {
-          case Bool(_) => boolOr(lowered)
-          case _ => throw new UnsupportedOperationException(
-            s"$model does not support OR") // MultimergeSturctured…:250-252
+    if (kept.isEmpty) return emptyLowered
+    val n = kept.length
+    // Fidelity quirk: the reference prunes stop children but zips the
+    // UNPRUNED weights list against the pruned lists (zip truncates,
+    // MultimergeSturcturedRetriever.scala:40-44), so after a stop child is
+    // dropped the remaining lists take the FIRST n weights positionally —
+    // not their own. Reproduced.
+    val weights =
+      if (node.op == QOp.WEIGHT) node.weights.take(n) else Seq.fill(n)(1.0)
+    def unsupported(what: String) =
+      throw new UnsupportedOperationException(s"$model does not support $what")
+    node.op match {
+      case QOp.NEAR => near(kept.map(lowerNode), node.prox)
+      // a one-child Boolean merge passes its child through unmerged
+      case QOp.OR | QOp.AND | QOp.SUM if n == 1 && model.isInstanceOf[Bool] =>
+        lowerNode(kept.head)
+      case op =>
+        val c = children(kept, weights)
+        op match {
+          case QOp.OR => model match {
+            case Bool(_) => boolOr(c)
+            case _ => unsupported("OR") // MultimergeSturctured…:250-252
+          }
+          case QOp.AND | QOp.SUM => model match {
+            case Bool(_) => boolAnd(c)
+            case _       => weightedMerge(c, weights)
+          }
+          case QOp.WEIGHT => model match {
+            case Indri(_, _, _) => weightedMerge(c, weights)
+            case _ => unsupported("WEIGHT") // BM25Retriever.scala:65-67
+          }
+          case QOp.UW => model match {
+            case Bool(_) => unsupported("UW") // BooleanRetriever.scala:205-210
+            case _ => uw(c, node.prox)
+          }
         }
-        case QOp.AND | QOp.SUM => model match {
-          case Bool(_) => boolAnd(lowered)
-          case _       => weightedMerge(lowered, List.fill(lowered.length)(1.0))
-        }
-        case QOp.WEIGHT => model match {
-          case Indri(_, _, _) =>
-            // Fidelity quirk: the reference prunes stop children but zips
-            // the UNPRUNED weights list against the pruned lists (zip
-            // truncates, MultimergeSturcturedRetriever.scala:40-44), so
-            // after a stop child is dropped the remaining lists take the
-            // FIRST n weights positionally — not their own. Reproduced.
-            weightedMerge(lowered, weights.take(lowered.length))
-          case _ => throw new UnsupportedOperationException(
-            s"$model does not support WEIGHT") // BM25Retriever.scala:65-67
-        }
-        case QOp.NEAR => near(lowered, prox)
-        case QOp.UW => model match {
-          case Bool(_) => throw new UnsupportedOperationException(
-            "Boolean does not support UW") // BooleanRetriever.scala:205-210
-          case _ => uw(lowered, prox)
-        }
-      }
     }
   }
 
@@ -441,3 +478,12 @@ class Engine(val index: SearchIndex, val model: Model,
       sys.props.getOrElse("graft.query.timeout.sec", "3600").toLong,
       java.util.concurrent.TimeUnit.SECONDS)
 }
+
+/** One row of an [[Engine]] leaf group's literal table: the (term, field)
+  * key, and per child listing it, its index and doubles — the score
+  * parameters ([[Scorer.termParams]]), the absent-term default and the
+  * weight.
+  */
+private[query] case class LeafKey(term: String, field: String)
+private[query] case class LeafParams(cidx: Int, p1: Double, p2: Double,
+                                     d: Double, w: Double)

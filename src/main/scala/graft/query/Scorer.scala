@@ -37,48 +37,68 @@ class Scorer(val model: Model, val stats: CollStats) extends Serializable {
   private val totalWords = stats.wordCount.toDouble
 
   /** Score of one posting of a term with collection stats (cf, df). */
-  def termScore(cf: Long, df: Long, tf: Int, dl: Double): Double = model match {
-    case BM25(k1, b) =>
-      math.log10((n - df + 0.5) / (df + 0.5)) * tf /
-        (tf + k1 * ((1 - b) + b * dl / avgdl))
+  def termScore(cf: Long, df: Long, tf: Int, dl: Double): Double = {
+    val (p1, p2) = termParams(cf, df)
+    model match {
+      case BM25(k1, b) =>
+        p1 * tf / (tf + k1 * ((1 - b) + b * dl / avgdl))
+      case Indri(lambda, mu, _) =>
+        val w = lambda * (tf + p1) / (dl + mu) + p2
+        // StrictMath: the log10 Spark's column evaluates (Math.log10 may be
+        // an intrinsic that differs in the last bit)
+        if (w == 0.0) Integer.MIN_VALUE.toDouble else StrictMath.log10(w)
+      case Bool(_) => tf.toDouble
+    }
+  }
+
+  /** The two per-term doubles [[termScoreCol]] takes, derived from
+    * (cf, df): BM25 (idf, unused); Indri (μ·prior, (1−λ)·prior); Boolean
+    * (unused, unused).
+    */
+  def termParams(cf: Long, df: Long): (Double, Double) = model match {
+    case BM25(_, _) => (math.log10((n - df + 0.5) / (df + 0.5)), 0.0)
     case Indri(lambda, mu, wordBased) =>
       val prior = if (wordBased) cf / totalWords else df / n
-      val w = lambda * (tf + mu * prior) / (dl + mu) + (1 - lambda) * prior
-      // StrictMath: the log10 Spark's column evaluates (Math.log10 may be
-      // an intrinsic that differs in the last bit)
-      if (w == 0.0) Integer.MIN_VALUE.toDouble else StrictMath.log10(w)
-    case Bool(_) => tf.toDouble
+      (mu * prior, (1 - lambda) * prior)
+    case Bool(_) => (0.0, 0.0)
   }
 
   /** Same formula as a column over (tf, dl), bit-identical to
     * [[termScore]]: the same double operations in the same order. The
-    * per-term doubles derived from cf/df (BM25 idf, Indri's μ·prior and
-    * (1−λ)·prior) enter as [[DoubleParam]]s, not literals, so every term
-    * shares one generated class; per-store constants stay literals. The
-    * session must be [[graft.query.expressions.QueryExpressions.prepare]]d.
+    * per-term doubles `p` ([[termParams]]) are columns, so every term
+    * shares one generated class as long as they reach generated code
+    * through `references` (a [[DoubleParam]] or a literal table lookup),
+    * not as inlined literals; per-store constants stay literals.
     */
-  def termScoreCol(cf: Long, df: Long, tf: Column, dl: Column): Column =
+  def termScoreCol(p: (Column, Column), tf: Column, dl: Column): Column =
     model match {
       case BM25(k1, b) =>
-        val idf = math.log10((n - df + 0.5) / (df + 0.5))
-        DoubleParam.column(idf) * tf.cast("double") /
+        p._1 * tf.cast("double") /
           (tf.cast("double") + lit(k1) *
             (lit(1 - b) + lit(b) * dl.cast("double") / lit(avgdl)))
-      case Indri(lambda, mu, wordBased) =>
-        val prior = if (wordBased) cf / totalWords else df / n
-        val w = lit(lambda) * (tf.cast("double") + DoubleParam.column(mu * prior)) /
-          (dl.cast("double") + lit(mu)) + DoubleParam.column((1 - lambda) * prior)
+      case Indri(lambda, mu, _) =>
+        val w = lit(lambda) * (tf.cast("double") + p._1) /
+          (dl.cast("double") + lit(mu)) + p._2
         when(w === 0.0, lit(Integer.MIN_VALUE.toDouble)).otherwise(log10(w))
       case Bool(_) => tf.cast("double")
     }
 
+  /** [[termScoreCol]] of a term with collection stats (cf, df), its
+    * doubles passed as [[DoubleParam]]s. The session must be
+    * [[graft.query.expressions.QueryExpressions.prepare]]d.
+    */
+  def termScoreCol(cf: Long, df: Long, tf: Column, dl: Column): Column = {
+    val (p1, p2) = termParams(cf, df)
+    termScoreCol((DoubleParam.column(p1), DoubleParam.column(p2)), tf, dl)
+  }
+
   /** Leaf read-time score (reference scores postings once at scan and
     * reuses them through all merges — InvertedList.scala:148).
     */
-  def leafScoreCol(cf: Long, df: Long, tf: Column, dl: Column): Column =
+  def leafScoreCol(p: (Column, Column), tf: Column, dl: Column): Column =
     model match {
       case Bool(ranked) => if (ranked) tf.cast("double") else lit(1.0)
-      case _            => termScoreCol(cf, df, tf, dl)
+      case _            => termScoreCol(p, tf, dl)
     }
 
   /** Default score of a term absent from a doc: tf=0, dl=avgdl (reference:

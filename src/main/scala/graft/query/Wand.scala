@@ -237,7 +237,9 @@ object Wand {
     // same floating-point shape as the exact path's k-fold score addition
     // for k ≤ 3 (s+s is exactly 2s), which eligibleBag enforces; a direct
     // caller passing k ≥ 4 gets scores tie-order-equivalent to the exact
-    // path (equal after 6dp rounding) rather than bit-identical
+    // path (equal after 6dp rounding) rather than bit-identical. This map
+    // and `idfs` hold one entry per query term: the range tasks capture
+    // them in their closure, no broadcast needed
     val mult = terms.groupBy(identity).map { case (t, g) => t -> g.size }
     val idfs = terms.distinct.flatMap { t =>
       val (df, _) = index.termStat(t, field)
@@ -247,12 +249,10 @@ object Wand {
     if (idfs.isEmpty)
       return Seq.empty[(Long, Double)].toDF("docId", "score")
     val rangeSize = math.max(1L, (coll.docCount + numRanges - 1) / numRanges)
-    val bcIdf = spark.sparkContext.broadcast(idfs)
-    val bcMult = spark.sparkContext.broadcast(mult)
 
-    val segs = idfs.keys.map(t =>
-      index.segmentsOf(t, field).withColumn("qterm", lit(t))).reduce(_ union _)
-      .select("qterm", "n", "blob", "blockFirst", "blockOff", "blockMaxTf",
+    // every term's segments in one pruned scan
+    val segs = index.segmentsOf(idfs.keys.toSeq.map(_ -> field))
+      .select("term", "n", "blob", "blockFirst", "blockOff", "blockMaxTf",
         "blockMinDl", "blockN", "lastDocId")
 
     val sliced = segs.as[(String, Int, Array[Byte], Seq[Long], Seq[Int],
@@ -282,10 +282,10 @@ object Wand {
         val byTerm = rows.toSeq.groupBy(_._2)
         val slices = byTerm.map { case (term, blocks) =>
           val sorted = blocks.sortBy(_._4)
-          TermSlice(bcIdf.value(term),
+          TermSlice(idfs(term),
             sorted.map(_._3).toArray, sorted.map(_._4).toArray,
             sorted.map(_._5).toArray, sorted.map(_._6).toArray,
-            sorted.map(_._7).toArray, bcMult.value.getOrElse(term, 1))
+            sorted.map(_._7).toArray, mult.getOrElse(term, 1))
         }.toSeq
         val mk1 = model.k1
         val mb = model.b

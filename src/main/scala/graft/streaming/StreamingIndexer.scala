@@ -18,10 +18,11 @@ import java.nio.file.{Files, Paths}
   * the query side needs is ascending-unique, which holds; documented
   * difference from the batch build's url-sorted dense ids).
   *
-  * `seal` materializes the derived tables (termstats, segments, docstats,
-  * collstats) over everything ingested so far; it clears the derived
-  * manifests first so re-sealing after more batches rebuilds them. Queries
-  * run against the sealed store exactly like a batch-built one.
+  * `seal` commits the docmap manifest and materializes the derived tables
+  * (termstats, segments, docstats, collstats) over everything ingested so
+  * far; it clears the derived manifests first so re-sealing after more
+  * batches rebuilds them. Queries run against the sealed store exactly
+  * like a batch-built one, and it merges like one.
   */
 object StreamingIndexer {
 
@@ -102,6 +103,9 @@ object StreamingIndexer {
       val p = Paths.get(s"$out/_manifests/$st.json")
       if (Files.exists(p)) Files.delete(p)
     }
+    // the docmap is complete once its batches are: record its size like
+    // the batch build does, so a sealed stream store can be merged
+    IndexStore.commit(out, "docmap", Map("docs" -> ingestedDocs(out)))
     IndexStore.derivedStages(spark, out, conf)
   }
 }

@@ -94,6 +94,19 @@ class CodegenSpec extends AnyFunSuite {
     }
   }
 
+  test("a 2-leaf and a 4-leaf group share their classes") {
+    // a node reads its leaves in one scan; neither the term set nor the
+    // per-leaf table may make the generated code depend on their number
+    assertStable("bool #or width", Seq("#or(w3 w40)", "#or(w5 w61 w7 obama)",
+      "#or(w2 family)")) { engineRun(Bool(), QOp.OR) }
+    assertStable("indri #and width", Seq("#and(w3 w40)",
+      "#and(w5 w61 w7 obama)", "#and(w2 family)")) { engineRun(Indri(), QOp.AND) }
+    assertStable("field bag width", Seq("w3+title w40+body",
+      "w5+title w61+body w7+title obama+body", "w2+body family+title")) {
+      engineRun(BM25(), QOp.SUM)
+    }
+  }
+
   // ------------------------------------------------------- bit identity
 
   private val coll = CollStats(docCount = 1000, avgDocLen = 123.7,

@@ -97,10 +97,42 @@ class PlanSpec extends AnyFunSuite {
     val scan = idx.segmentsOf("w1", "default")
     val ps = scan.queryExecution.executedPlan.toString
     // partition dirs (field, tb) pruned at plan time; term filter pushed
-    // into the parquet scan
+    // into the parquet scan (a term set: the batch lookup's one predicate)
     assert(ps.contains("PartitionFilters") &&
       (ps.contains("isnotnull(field") || ps.contains("field#")), ps)
-    assert(ps.contains("PushedFilters") && ps.contains("EqualTo(term,w1)"), ps)
+    assert(ps.contains("PushedFilters") && ps.contains("In(term, [w1])"), ps)
+  }
+
+  lazy val store: graft.index.ParquetIndex = {
+    val dir = java.nio.file.Files.createTempDirectory("plan-group").toString
+    graft.index.IndexStore.build(
+      graft.corpus.SyntheticCorpus.pages(spark, 600, 4).toDF(), dir,
+      graft.index.BuildConf(numSlices = 1, numBuckets = 4, termBuckets = 8,
+        shufflePartitions = 4))
+    graft.index.IndexStore.open(spark, dir, 8)
+  }
+
+  /** Parquet scans of the store's segments table in a query's plan. */
+  def segmentScans(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "segments") => s
+    }.length
+
+  test("a node's leaf children plan one segments scan, terms pushed as one set") {
+    import graft.query._
+    val boolEngine = new Engine(store, Bool())
+    val p = new QueryParser(defaultOp = QOp.OR)
+    val flat = boolEngine.search("#or(w1 w2 obama family)", 10, p)
+    assert(segmentScans(flat) == 1, planOf(flat))
+    val pushed = "In\\(term, \\[([^\\]]*)\\]".r.findFirstMatchIn(planOf(flat))
+      .map(_.group(1).split(",").map(_.trim).toSet)
+    assert(pushed == Some(Set("w1", "w2", "obama", "family")), planOf(flat))
+    val nested = boolEngine.search("#and(w1 #or(w2 obama))", 10, p)
+    assert(segmentScans(nested) == 2, planOf(nested))
+    val bag = Wand.bm25TopK(spark, store, Seq("w1", "w2", "obama", "family"),
+      "default", 10)
+    assert(segmentScans(bag) == 1, planOf(bag))
   }
 
   test("termStat dictionary lookups are driver-local (zero Spark jobs)") {

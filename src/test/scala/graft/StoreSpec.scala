@@ -56,6 +56,18 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
+  test("a store opened by file:// URI serves Engine and WAND queries") {
+    val byUri = IndexStore.open(spark, s"file://$outDir", 16)
+    assert(byUri.collStats == pIndex.collStats)
+    val parser = new QueryParser(defaultOp = QOp.SUM)
+    def engineTop(idx: ParquetIndex) = new Engine(idx, BM25())
+      .search("obama family tree", 10, parser).collect().map(_.toString).toList
+    def wandTop(idx: ParquetIndex) = graft.query.Wand.bm25TopK(spark, idx,
+      Seq("obama", "family", "w3"), "default", 10).collect().map(_.toString).toList
+    assert(engineTop(byUri) == engineTop(pIndex))
+    assert(wandTop(byUri) == wandTop(pIndex))
+  }
+
   test("heavy terms are salted into multiple segments") {
     val segs = pIndex.segmentsOf("w0", "default").collect()
     assert(segs.length > 1, "w0 should be df-heavy and range-bucketed")

@@ -95,4 +95,42 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$outDir/_manifests/docid-hwm")).trim.toLong
     assert(hwm == spark.read.parquet(s"$outDir/docmap").count())
   }
+
+  test("a sealed stream store merges with a batch store like one build over all pages") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-merge").toString
+    // pages [0, 120) streamed in two batches, [120, 240) batch-built
+    val source = MemoryStream[Page]
+    val q = StreamingIndexer.ingest(source.toDF(), s"$base/stream", conf)
+    (0 until 2).foreach { b =>
+      source.addData((b * 60L until (b + 1) * 60L).map(SyntheticCorpus.page))
+      q.processAllAvailable()
+    }
+    q.stop()
+    StreamingIndexer.seal(spark, s"$base/stream", conf)
+    assert(IndexStore.manifestCounter(s"$base/stream", "docmap", "docs") ==
+      spark.read.parquet(s"$base/stream/docmap").count())
+    IndexStore.build((120L until NumDocs).map(SyntheticCorpus.page).toDF(),
+      s"$base/batch", conf)
+    IndexStore.mergeStores(spark, s"$base/stream", s"$base/batch",
+      s"$base/merged", conf)
+
+    def collstats(dir: String): Set[String] =
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dir, "collstats.json"))
+        .toArray.map(_.toString.trim.stripSuffix(",")).toSet
+    assert(collstats(s"$base/merged") == collstats(batchDir))
+    def top(dir: String, query: String): Set[(String, Long)] = {
+      val hits = new Engine(IndexStore.open(spark, dir, 16), BM25())
+        .search(query, 10, new QueryParser(defaultOp = QOp.SUM))
+        .select("docId", "score").collect().map(r => r.getLong(0) -> r.getDouble(1))
+      val urls = spark.read.parquet(s"$dir/docmap").select("docId", "url")
+        .filter(col("docId").isin(hits.map(_._1).toSeq: _*)).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      hits.map { case (d, s) => (urls(d), math.round(s * 1e9)) }.toSet
+    }
+    Seq("obama family tree", "#near/2(obama family)").foreach { query =>
+      assert(top(s"$base/merged", query) == top(batchDir, query), query)
+    }
+  }
 }
