@@ -84,9 +84,11 @@ object Bench {
   }
 
   /** The scaling metric compares the SAME JOB at two parallelism levels, so
-    * everything that changes per-row work is pinned: numBuckets (bucket
-    * boundaries cut mini-segments), splitBytes (task boundaries cut them
-    * too). Only shufflePartitions scales — reducer count is how a real
+    * everything that changes per-row work is pinned: the bucket size
+    * (bucket boundaries cut mini-segments — `max(ceil(docs / numBuckets),
+    * bucketDocs)`, both constants here, so 8 buckets of 65,536 docs at
+    * 480k docs), splitBytes (task boundaries cut them too). Only
+    * shufflePartitions scales — reducer count is how a real
     * cluster adapts, and it moves the same rows either way. Round 2 derived
     * numBuckets and split size from the level and the hi level quietly did
     * ~4x the merge-stage work per row (merge CPU 45 s lo vs 407 s hi on

@@ -81,8 +81,10 @@ object IndexBuilder {
     * pre-encoded rows instead of one row per posting (10²–10³× fewer at
     * web scale). Buckets are docId ranges of `rangeSize` docs: a head term
     * (Zipf skew) is split across buckets, so no reduce task ever sees more
-    * than ~rangeSize postings of one term, and concatenating buckets in
-    * bucket order keeps docId order for free.
+    * than rangeSize postings of one term in one group, and concatenating
+    * buckets in bucket order keeps docId order for free. Callers pass
+    * `BuildConf.bucketDocs` (streaming) or at least it (batch), so a
+    * store of up to `bucketDocs` docs has one bucket per term.
     *
     * Per-field doc lengths ride along as sentinel rows (term = "", one per
     * (field, run): blob = standard encoding of (docId, tf=docLength)) so

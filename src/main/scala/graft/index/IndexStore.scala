@@ -43,20 +43,32 @@ import scala.util.control.NonFatal
   * per posting. Head-term skew (Zipf) is defused structurally: buckets are
   * fixed docId ranges, so "the" arrives as many bounded mini-segments that
   * byte-concatenate (Codec.SegmentMerger — interior deltas stay valid) on
-  * different reduce tasks. Point lookups prune on (field, tb) partition
+  * different reduce tasks. A bucket holds `max(ceil(docs / numBuckets),
+  * bucketDocs)` docs: the floor keeps small stores at one segment row per
+  * (term, field) — the layout a stream-built store has — because every
+  * build, merge and delete pays per row; `numBuckets` caps the row size
+  * only at web scale. Point lookups prune on (field, tb) partition
   * directories, tb = xxhash64(term) mod termBuckets.
   */
 case class BuildConf(
     numSlices: Int = 8,
+    /** Cap on the number of docId-range buckets of a batch build. Buckets
+      * hold `max(ceil(docs / numBuckets), bucketDocs)` docs, so the cap
+      * binds only past `numBuckets × bucketDocs` docs, where it sets the
+      * bucket size and with it the most postings one segment row holds.
+      */
     numBuckets: Int = 32,
     termBuckets: Int = 64,
     langFilter: Option[String] = Some("en"),
     shufflePartitions: Int = 32,
-    /** docs per docId-range bucket for STREAMING stores (total doc count
-      * is unknown up front there; must stay constant for a store's life).
-      * Batch builds derive the bucket size from the docmap count instead.
+    /** Docs per docId-range bucket, in both build paths. Streaming stores
+      * use it as is (their total doc count is unknown up front; it must
+      * stay constant for a store's life); batch builds use it as the
+      * floor of their bucket size. A batch and a stream store of up to
+      * `numBuckets × bucketDocs` docs therefore share one layout: one
+      * segment row per (term, field, bucket).
       */
-    streamBucketDocs: Long = 1L << 16,
+    bucketDocs: Long = 1L << 16,
     /** Mini-segment scan split size in bytes; 0 derives it from the docmap
       * size and shuffle partitions. Set explicitly when two runs must do
       * IDENTICAL per-row work (the scaling benchmark: task boundaries cut
@@ -130,9 +142,10 @@ object IndexStore {
     val sorted = slim.repartitionByRange(partitions, col("url"))
       .sortWithinPartitions("url")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = sorted.select(spark_partition_id().as("pid"))
+    val counts = try sorted.select(spark_partition_id().as("pid"))
       .groupBy("pid").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    catch { case NonFatal(e) => sorted.unpersist(); slim.unpersist(); throw e }
     slim.unpersist() // sorted is materialized by the count job
     val offsets = new Array[Long](partitions)
     var acc = offset
@@ -181,6 +194,28 @@ object IndexStore {
     "tokens" -> m("tokens").asInstanceOf[Long],
     "docs" -> m("docs").asInstanceOf[Long])
 
+  /** Docs per docId-range bucket of a batch build over `totalDocs` docs:
+    * `numBuckets` buckets, but never fewer than `bucketDocs` docs each,
+    * so a small store gets one segment row per (term, field) instead of
+    * many few-posting rows whose per-row cost every rewrite pays again.
+    */
+  private def bucketSize(totalDocs: Long, conf: BuildConf): Long =
+    math.max((totalDocs + conf.numBuckets - 1) / conf.numBuckets,
+      math.max(1L, conf.bucketDocs))
+
+  /** Waits for every future, then rethrows the first failure (in `fs`
+    * order), so no sibling job still runs when the caller cleans up.
+    */
+  private def awaitAll(fs: Seq[scala.concurrent.Future[Unit]]): Unit = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    val failures = fs.flatMap { f =>
+      try { Await.result(f, Duration.Inf); None }
+      catch { case NonFatal(e) => Some(e) }
+    }
+    failures.headOption.foreach(throw _)
+  }
+
   /** Full build. Each stage is skipped when already committed. */
   def build(pages: DataFrame, out: String,
             conf: BuildConf = BuildConf()): Unit = {
@@ -212,10 +247,8 @@ object IndexStore {
         !isCommitted(out, "segments")) {
       val (ids, totalDocs0, release) =
         assignDocIds(filtered, conf.shufflePartitions)
-      val rangeSize0 =
-        math.max(1L, (totalDocs0 + conf.numBuckets - 1) / conf.numBuckets)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
+      val rangeSize0 = bucketSize(totalDocs0, conf)
+      import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
       val fDocmap = Future {
         val obs = org.apache.spark.sql.Observation("docmap")
@@ -235,9 +268,9 @@ object IndexStore {
         commit(out, "minisegs-slice-0", miniCounters(obs.get) +
           ("rangeSize" -> rangeSize0, "fused" -> 1L))
       }
-      Await.result(fDocmap, Duration.Inf)
-      Await.result(fSegs, Duration.Inf)
-      release()
+      // await BOTH writers before releasing the shared cache, whichever
+      // fails: a sibling still running would read an unpersisted input
+      try awaitAll(Seq(fDocmap, fSegs)) finally release()
       mark("docmap ∥ minisegs+segments (deep-fused)")
       derivedStages(spark, out, conf, mark)
       return
@@ -260,8 +293,7 @@ object IndexStore {
     }
     mark("docmap")
     val totalDocs = manifestCounter(out, "docmap", "docs")
-    val rangeSize =
-      math.max(1L, (totalDocs + conf.numBuckets - 1) / conf.numBuckets)
+    val rangeSize = bucketSize(totalDocs, conf)
 
     // stage 1: mini-segments, one resumable docId-range slice at a time ----
     // The scan's split size gates this stage's parallelism (it is the
@@ -516,7 +548,8 @@ object IndexStore {
       val dcRow = Await.result(fDc, Duration.Inf)
       val docCounts = Seq("default", "title", "body", "url").zipWithIndex
         .map { case (f, i) => f -> dcRow.getLong(i) }.toMap
-      val rows = Await.result(fPf, Duration.Inf).map { r =>
+      // field order, so equal stores write byte-identical files
+      val rows = Await.result(fPf, Duration.Inf).sortBy(_.getString(0)).map { r =>
         val field = r.getString(0)
         val dc = docCounts(field)
         val vocab = r.getLong(1)
@@ -567,8 +600,7 @@ object IndexStore {
     // they run as concurrent jobs (guide §2.6) and only collstats — which
     // reads the merged smalls — waits for them. Resume safety is
     // unchanged: every stage still commits its own manifest.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
 
     val fDocmap = Future { if (!isCommitted(out, "docmap")) {
@@ -650,8 +682,7 @@ object IndexStore {
       commit(out, "docstats", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
     } }
 
-    Seq(fDocmap, fSegments, fTermstats, fDocstats)
-      .foreach(Await.result(_, Duration.Inf))
+    awaitAll(Seq(fDocmap, fSegments, fTermstats, fDocstats))
     writeCollstats(spark, out)
   }
 
@@ -684,8 +715,7 @@ object IndexStore {
     // segments→termstats chain and the two url anti-joins run as
     // concurrent jobs (guide §2.6), with collstats last. Manifest
     // commit/skip per stage is unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
 
     val fSegTerm = Future {
@@ -781,7 +811,7 @@ object IndexStore {
       commit(out, "docstats", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
     } }
 
-    Seq(fSegTerm, fDocmap, fDocstats).foreach(Await.result(_, Duration.Inf))
+    awaitAll(Seq(fSegTerm, fDocmap, fDocstats))
     writeCollstats(spark, out)
   }
 

@@ -33,10 +33,13 @@ object Mains {
   * corpus) → resumable index build at `outDir`.
   *
   * Usage: IndexMain <input> <outDir> [numSlices] [numBuckets]
+  * (numBuckets caps the docId-range bucket count: buckets never hold
+  * fewer than `BuildConf.bucketDocs` = 65,536 docs, so the cap binds only
+  * past numBuckets × 65,536 docs).
   */
 object IndexMain {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: IndexMain <pagesParquet|synthetic:N> <outDir> [slices] [buckets]")
+    require(args.length >= 2, "usage: IndexMain <pagesParquet|synthetic:N> <outDir> [slices] [maxBuckets]")
     val spark = Mains.session("graft-index")
     val pages =
       if (args(0).startsWith("synthetic:"))
@@ -251,7 +254,8 @@ object BuildProf {
           }
         })
       // SAME work at every level (see Bench.buildConf): only reducer count
-      // scales; numBuckets + splitBytes pin per-row work, corpus parquet is
+      // scales; the bucket size (numBuckets with its constant bucketDocs
+      // floor) and splitBytes pin per-row work, corpus parquet is
       // materialized untimed with a fixed file count
       val conf = graft.index.BuildConf(numSlices = 1,
         numBuckets = 16, termBuckets = 32,

@@ -41,9 +41,11 @@ object StreamingIndexer {
     * append docmap shard + minisegs slice, commit the batch manifest.
     * Public so tests and foreachBatch share the exact code path.
     *
-    * Buckets use the FIXED conf.streamBucketDocs range size (total doc
+    * Buckets use the FIXED conf.bucketDocs range size (total doc
     * count is unknown while ingesting; the value must stay constant for a
-    * store's lifetime so bucket ranges never overlap across batches).
+    * store's lifetime so bucket ranges never overlap across batches). A
+    * batch build of up to numBuckets × bucketDocs docs uses the same
+    * size, so the two paths produce the same layout.
     */
   def processBatch(batch: DataFrame, batchId: Long, out: String,
                    conf: BuildConf): Unit = {
@@ -66,7 +68,7 @@ object StreamingIndexer {
           .parquet(s"$out/docmap/batch=$batchId")
       }
       val (obs, aggs) = IndexStore.miniObs(s"batch-$batchId")
-      IndexBuilder.miniSegments(ids, conf.streamBucketDocs).toDF()
+      IndexBuilder.miniSegments(ids, conf.bucketDocs).toDF()
         .observe(obs, aggs.head, aggs.tail: _*)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$out/minisegs/slice=b$batchId")

@@ -14,11 +14,26 @@ class StoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   val NumDocs = 400L
+  /** 100-doc buckets: four over the 400 docs, so heavy-term salting and
+    * cross-bucket merge/delete stay covered (the default bucket size puts
+    * a store this small in one bucket).
+    */
+  val SmallBuckets = 100L
   lazy val outDir: String = {
     val dir = Files.createTempDirectory("graft-store").toString
     val pages = SyntheticCorpus.pages(spark, NumDocs, 8).toDF()
     IndexStore.build(pages, dir,
       BuildConf(numSlices = 4, numBuckets = 4,
+        termBuckets = 16, shufflePartitions = 8, bucketDocs = SmallBuckets))
+    dir
+  }
+  /** The same pages in the default layout: one bucket, so one segment row
+    * per (term, field).
+    */
+  lazy val oneBucketDir: String = {
+    val dir = Files.createTempDirectory("graft-store-1b").toString
+    IndexStore.build(SyntheticCorpus.pages(spark, NumDocs, 8).toDF(), dir,
+      BuildConf(numSlices = 1, numBuckets = 4,
         termBuckets = 16, shufflePartitions = 8))
     dir
   }
@@ -32,6 +47,23 @@ class StoreSpec extends AnyFunSuite {
     IndexBuilder.inMemory(
       IndexBuilder.buildPostings(IndexStore.fieldDocs(docmap)))
   }
+
+  /** docId ranges of a term's segment rows in bucket order: the layout
+    * contract is that they ascend and never overlap.
+    */
+  def assertBucketsOrdered(idx: ParquetIndex, term: String, clue: String): Unit = {
+    val ranges = idx.segmentsOf(term, "default").collect()
+      .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("firstDocId"),
+        r.getAs[Long]("lastDocId"))).sortBy(_._1)
+    ranges.sliding(2).foreach {
+      case Array((b1, _, l1), (b2, f2, _)) =>
+        assert(b1 < b2 && l1 < f2, s"$clue: $term buckets overlap")
+      case _ =>
+    }
+  }
+
+  def bucketCount(dir: String): Long =
+    spark.read.parquet(s"$dir/segments").select("bucket").distinct().count()
 
   test("stats match in-memory build") {
     assert(pIndex.collStats == memIndex.collStats)
@@ -72,12 +104,7 @@ class StoreSpec extends AnyFunSuite {
     val segs = pIndex.segmentsOf("w0", "default").collect()
     assert(segs.length > 1, "w0 should be df-heavy and range-bucketed")
     // buckets are docId ranges: non-overlapping and ordered
-    val ranges = segs.map(r => (r.getAs[Long]("firstDocId"),
-      r.getAs[Long]("lastDocId"))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, l1), (f2, _)) => assert(l1 < f2)
-      case _ =>
-    }
+    assertBucketsOrdered(pIndex, "w0", "full build")
   }
 
   test("query over ParquetIndex matches query over in-memory index") {
@@ -120,7 +147,7 @@ class StoreSpec extends AnyFunSuite {
     val pages = SyntheticCorpus.pages(spark, NumDocs, 8).toDF()
     IndexStore.build(pages, outDir,
       BuildConf(numSlices = 4, numBuckets = 4,
-        termBuckets = 16, shufflePartitions = 8))
+        termBuckets = 16, shufflePartitions = 8, bucketDocs = SmallBuckets))
     // untouched slice not recomputed (manifest mtime unchanged)
     assert(Files.getLastModifiedTime(
       Paths.get(s"$outDir/_manifests/minisegs-slice-1.json")) == before)
@@ -138,7 +165,7 @@ class StoreSpec extends AnyFunSuite {
     val pages = SyntheticCorpus.pages(spark, NumDocs, 8).toDF()
     IndexStore.build(pages, dir,
       BuildConf(numSlices = 1, numBuckets = 4,
-        termBuckets = 16, shufflePartitions = 8))
+        termBuckets = 16, shufflePartitions = 8, bucketDocs = SmallBuckets))
     assert(!Files.exists(Paths.get(dir, "minisegs")), "fused build wrote minisegs")
     val fused = IndexStore.open(spark, dir, 16)
     assert(fused.collStats == pIndex.collStats)
@@ -164,61 +191,69 @@ class StoreSpec extends AnyFunSuite {
 
   test("mergeStores of two url-split half stores answers identically to the full build") {
     outDir // force the full build (the comparison target)
-    val conf = BuildConf(numSlices = 2, numBuckets = 4,
-      termBuckets = 16, shufflePartitions = 8)
-    val base = Files.createTempDirectory("graft-merge").toString
     val pages = SyntheticCorpus.pages(spark, NumDocs, 8).toDF()
     // split by url order (all A urls < all B urls): the merged store's
     // dense docId assignment then equals the full build's, so every table
     // must agree with pIndex, not just query results
     val urls = pages.select("url").orderBy("url").collect().map(_.getString(0))
     val median = urls(urls.length / 2)
-    IndexStore.build(pages.filter(col("url") < median), s"$base/a", conf)
-    IndexStore.build(pages.filter(col("url") >= median), s"$base/b", conf)
-    IndexStore.mergeStores(spark, s"$base/a", s"$base/b", s"$base/ab", conf)
-    val merged = IndexStore.open(spark, s"$base/ab", 16)
+    // halves in the default one-bucket layout, and in 100-doc buckets (two
+    // per half, so B's bucket offset must order its buckets after A's)
+    Seq(BuildConf().bucketDocs, SmallBuckets).foreach { bucketDocs =>
+      val layout = s"bucketDocs=$bucketDocs"
+      val conf = BuildConf(numSlices = 2, numBuckets = 4,
+        termBuckets = 16, shufflePartitions = 8, bucketDocs = bucketDocs)
+      val base = Files.createTempDirectory("graft-merge").toString
+      IndexStore.build(pages.filter(col("url") < median), s"$base/a", conf)
+      IndexStore.build(pages.filter(col("url") >= median), s"$base/b", conf)
+      if (bucketDocs == SmallBuckets) assert(bucketCount(s"$base/a") > 1, layout)
+      else assert(bucketCount(s"$base/a") == 1, layout)
+      IndexStore.mergeStores(spark, s"$base/a", s"$base/b", s"$base/ab", conf)
+      val merged = IndexStore.open(spark, s"$base/ab", 16)
 
-    assert(merged.collStats == pIndex.collStats)
-    Seq(("w0", "default"), ("obama", "default"), ("w123", "title"),
-      ("zzz", "default")).foreach { case (t, f) =>
-      assert(merged.termStat(t, f) == pIndex.termStat(t, f), s"($t,$f)")
-    }
-    // decoded postings bit-identical, including the rebased B half and
-    // position runs (rebaseBlob must not disturb anything but the header)
-    Seq("w0", "w1", "obama", "w777").foreach { t =>
-      val a = merged.postings(t, "default").orderBy("docId")
-        .collect().map(_.toString).toSeq
-      val b = pIndex.postings(t, "default").orderBy("docId")
-        .collect().map(_.toString).toSeq
-      assert(a == b, s"postings diverge for $t")
-    }
-    val parser = new QueryParser(defaultOp = QOp.SUM)
-    Seq("obama family tree", "#near/2(obama family)").foreach { q =>
-      val a = new Engine(merged, BM25()).search(q, 20, parser)
+      assert(merged.collStats == pIndex.collStats, layout)
+      Seq(("w0", "default"), ("obama", "default"), ("w123", "title"),
+        ("zzz", "default")).foreach { case (t, f) =>
+        assert(merged.termStat(t, f) == pIndex.termStat(t, f), s"$layout ($t,$f)")
+      }
+      // decoded postings bit-identical, including the rebased B half and
+      // position runs (rebaseBlob must not disturb anything but the header)
+      Seq("w0", "w1", "obama", "w777").foreach { t =>
+        val a = merged.postings(t, "default").orderBy("docId")
+          .collect().map(_.toString).toSeq
+        val b = pIndex.postings(t, "default").orderBy("docId")
+          .collect().map(_.toString).toSeq
+        assert(a == b, s"$layout: postings diverge for $t")
+        assertBucketsOrdered(merged, t, layout)
+      }
+      val parser = new QueryParser(defaultOp = QOp.SUM)
+      Seq("obama family tree", "#near/2(obama family)").foreach { q =>
+        val a = new Engine(merged, BM25()).search(q, 20, parser)
+          .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toList
+        val b = new Engine(pIndex, BM25()).search(q, 20, parser)
+          .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toList
+        assert(a == b, s"$layout: '$q'")
+      }
+      // WAND over the merged store: exercises the rebased block metadata
+      // (blockFirst/blockOff drive decodeBlock skips)
+      val wa = graft.query.Wand.bm25TopK(spark, merged,
+        Seq("obama", "family", "w3"), "default", 10)
+        .orderBy(col("score").desc, col("docId").desc)
         .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toList
-      val b = new Engine(pIndex, BM25()).search(q, 20, parser)
+      val wb = graft.query.Wand.bm25TopK(spark, pIndex,
+        Seq("obama", "family", "w3"), "default", 10)
+        .orderBy(col("score").desc, col("docId").desc)
         .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toList
-      assert(a == b, s"'$q'")
+      assert(wa == wb, layout)
+      // merged doc count = sum of halves = full build's; re-merge is a no-op
+      assert(IndexStore.manifestCounter(s"$base/ab", "docmap", "docs") ==
+        IndexStore.manifestCounter(outDir, "docmap", "docs"), layout)
+      val mtime = Files.getLastModifiedTime(
+        Paths.get(s"$base/ab/_manifests/segments.json"))
+      IndexStore.mergeStores(spark, s"$base/a", s"$base/b", s"$base/ab", conf)
+      assert(Files.getLastModifiedTime(
+        Paths.get(s"$base/ab/_manifests/segments.json")) == mtime, layout)
     }
-    // WAND over the merged store: exercises the rebased block metadata
-    // (blockFirst/blockOff drive decodeBlock skips)
-    val wa = graft.query.Wand.bm25TopK(spark, merged,
-      Seq("obama", "family", "w3"), "default", 10)
-      .orderBy(col("score").desc, col("docId").desc)
-      .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toList
-    val wb = graft.query.Wand.bm25TopK(spark, pIndex,
-      Seq("obama", "family", "w3"), "default", 10)
-      .orderBy(col("score").desc, col("docId").desc)
-      .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toList
-    assert(wa == wb)
-    // merged doc count = sum of halves = full build's; re-merge is a no-op
-    assert(IndexStore.manifestCounter(s"$base/ab", "docmap", "docs") ==
-      IndexStore.manifestCounter(outDir, "docmap", "docs"))
-    val mtime = Files.getLastModifiedTime(
-      Paths.get(s"$base/ab/_manifests/segments.json"))
-    IndexStore.mergeStores(spark, s"$base/a", s"$base/b", s"$base/ab", conf)
-    assert(Files.getLastModifiedTime(
-      Paths.get(s"$base/ab/_manifests/segments.json")) == mtime)
   }
 
   test("deleteDocs keeps stable ids and matches a fresh build of the survivors") {
@@ -226,17 +261,6 @@ class StoreSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft-del").toString
     val fullMap = spark.read.parquet(s"$outDir/docmap").select("url", "docId")
     val delUrls = fullMap.filter(col("docId") % 5 === 2).select("url")
-    IndexStore.deleteDocs(spark, outDir, s"$base/del", delUrls,
-      BuildConf(termBuckets = 16))
-    val del = IndexStore.open(spark, s"$base/del", 16)
-
-    // survivor docIds are STABLE: the deleted store's docmap is exactly
-    // the full docmap minus the deleted urls, ids included
-    val a = spark.read.parquet(s"$base/del/docmap").select("url", "docId")
-      .orderBy("docId").collect().map(_.toString).toSeq
-    val b = fullMap.join(delUrls, Seq("url"), "left_anti")
-      .orderBy("docId").collect().map(_.toString).toSeq
-    assert(a == b)
 
     // semantic target: a FRESH build over the survivor pages (dense
     // re-assigned ids — compare through each store's own url mapping)
@@ -245,22 +269,13 @@ class StoreSpec extends AnyFunSuite {
       s"$base/fresh", BuildConf(numSlices = 1, numBuckets = 4,
         termBuckets = 16, shufflePartitions = 8))
     val fresh = IndexStore.open(spark, s"$base/fresh", 16)
-    assert(del.collStats == fresh.collStats)
-    Seq(("w0", "default"), ("obama", "default"), ("w123", "title"),
-      ("zzz", "default")).foreach { case (t, f) =>
-      assert(del.termStat(t, f) == fresh.termStat(t, f), s"($t,$f)")
-    }
+    val parser = new QueryParser(defaultOp = QOp.SUM)
     def byUrl(idx: ParquetIndex, storeDir: String, t: String) =
       idx.postings(t, "default")
         .join(spark.read.parquet(s"$storeDir/docmap").select("url", "docId"),
           "docId")
         .select("url", "tf", "dl", "positions").orderBy("url")
         .collect().map(_.toString).toSeq
-    Seq("w0", "w1", "obama", "w777").foreach { t =>
-      assert(byUrl(del, s"$base/del", t) == byUrl(fresh, s"$base/fresh", t),
-        s"postings diverge for $t")
-    }
-    val parser = new QueryParser(defaultOp = QOp.SUM)
     def topUrls(idx: ParquetIndex, storeDir: String) =
       new Engine(idx, BM25()).search("obama family w3", 15, parser)
         .join(spark.read.parquet(s"$storeDir/docmap").select("url", "docId"),
@@ -268,13 +283,44 @@ class StoreSpec extends AnyFunSuite {
         .collect().map(r => (r.getAs[String]("url"),
           math.round(r.getAs[Double]("score") * 1e9)))
         .sortBy(_._1).toList
-    assert(topUrls(del, s"$base/del") == topUrls(fresh, s"$base/fresh"))
-    // repeat is a manifest no-op
-    val mtime = Files.getLastModifiedTime(
-      Paths.get(s"$base/del/_manifests/segments.json"))
-    IndexStore.deleteDocs(spark, outDir, s"$base/del", delUrls,
-      BuildConf(termBuckets = 16))
-    assert(Files.getLastModifiedTime(
-      Paths.get(s"$base/del/_manifests/segments.json")) == mtime)
+
+    // sources: 100-doc buckets (rows outside every deleted id's range copy
+    // verbatim, the rest re-encode) and the default one-bucket layout
+    // (every row of a term with a deleted posting re-encodes); both assign
+    // the same docIds (dense by url order)
+    assert(bucketCount(oneBucketDir) == 1)
+    Seq("small-buckets" -> outDir, "one-bucket" -> oneBucketDir).foreach {
+      case (layout, src) =>
+        val out = s"$base/del-$layout"
+        IndexStore.deleteDocs(spark, src, out, delUrls, BuildConf(termBuckets = 16))
+        val del = IndexStore.open(spark, out, 16)
+
+        // survivor docIds are STABLE: the deleted store's docmap is exactly
+        // the full docmap minus the deleted urls, ids included
+        val a = spark.read.parquet(s"$out/docmap").select("url", "docId")
+          .orderBy("docId").collect().map(_.toString).toSeq
+        val b = spark.read.parquet(s"$src/docmap").select("url", "docId")
+          .join(delUrls, Seq("url"), "left_anti")
+          .orderBy("docId").collect().map(_.toString).toSeq
+        assert(a == b, layout)
+
+        assert(del.collStats == fresh.collStats, layout)
+        Seq(("w0", "default"), ("obama", "default"), ("w123", "title"),
+          ("zzz", "default")).foreach { case (t, f) =>
+          assert(del.termStat(t, f) == fresh.termStat(t, f), s"$layout ($t,$f)")
+        }
+        Seq("w0", "w1", "obama", "w777").foreach { t =>
+          assert(byUrl(del, out, t) == byUrl(fresh, s"$base/fresh", t),
+            s"$layout: postings diverge for $t")
+          assertBucketsOrdered(del, t, layout)
+        }
+        assert(topUrls(del, out) == topUrls(fresh, s"$base/fresh"), layout)
+        // repeat is a manifest no-op
+        val mtime = Files.getLastModifiedTime(
+          Paths.get(s"$out/_manifests/segments.json"))
+        IndexStore.deleteDocs(spark, src, out, delUrls, BuildConf(termBuckets = 16))
+        assert(Files.getLastModifiedTime(
+          Paths.get(s"$out/_manifests/segments.json")) == mtime, layout)
+    }
   }
 }

@@ -59,6 +59,27 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** Segment rows of real terms (a fused build also keeps doclen rows). */
+  def termRows(dir: String): Long =
+    spark.read.parquet(s"$dir/segments").filter(col("term") =!= "").count()
+
+  test("a batch store below the bucket floor has one segment row per (term, field)") {
+    // 240 docs: numBuckets = 4 alone would cut 60-doc buckets
+    val rows = termRows(batchDir)
+    assert(rows == spark.read.parquet(s"$batchDir/termstats").count())
+    assert(rows == IndexStore.manifestCounter(batchDir, "segments", "segments"))
+  }
+
+  test("a batch-built and a stream-built store of the same pages share one layout") {
+    assert(termRows(batchDir) == termRows(outDir))
+    def termstats(dir: String) = spark.read.parquet(s"$dir/termstats")
+      .select("term", "field", "df", "cf").collect().map(_.toString).toSeq.sorted
+    assert(termstats(batchDir) == termstats(outDir))
+    def collstats(dir: String) =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "collstats.json"))
+    assert(collstats(batchDir) == collstats(outDir))
+  }
+
   test("query over sealed streaming store matches batch build (by url)") {
     val sIdx = IndexStore.open(spark, outDir, 16)
     val bIdx = IndexStore.open(spark, batchDir, 16)
