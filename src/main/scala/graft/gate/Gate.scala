@@ -206,16 +206,11 @@ object MergedStoreCache {
       // each increment builds concurrently. Overlapping them hides each
       // build's driver/scheduling latency behind the other's (guide
       // §2.6); manifest resume semantics are per-store and unchanged.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fa = Future(graft.index.IndexStore.build(
-          pages.filter(col("doc_id") < half).drop("doc_id"), s"$base/a", conf))
-        val fb = Future(graft.index.IndexStore.build(
+      graft.index.IndexStore.concurrently(
+        () => graft.index.IndexStore.build(
+          pages.filter(col("doc_id") < half).drop("doc_id"), s"$base/a", conf),
+        () => graft.index.IndexStore.build(
           pages.filter(col("doc_id") >= half).drop("doc_id"), s"$base/b", conf))
-        Await.result(fa, Duration.Inf); Await.result(fb, Duration.Inf)
-      }
       graft.index.IndexStore.mergeStores(spark, s"$base/a", s"$base/b",
         s"$base/ab", conf)
     }

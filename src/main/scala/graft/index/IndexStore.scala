@@ -1,11 +1,12 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import graft.model._
 import graft.query.expressions.{InValues, QueryExpressions}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.control.NonFatal
 
 /** Persistent index layout + staged, resumable build.
@@ -31,10 +32,28 @@ import scala.util.control.NonFatal
   *     collstats.json           per-field collection stats
   *     _manifests/<stage>.json  committed stages with counters
   *
-  * Resume: every stage (and every minisegs slice) commits a manifest entry
-  * AFTER its output is fully written; `build` skips committed work, so an
-  * interrupted build restarts without recomputing finished slices and the
-  * final index is identical (deterministic input + deterministic stages).
+  * Stages: every step of build, merge, delete and the streaming indexer
+  * runs through [[stage]]. A stage whose manifest exists is skipped;
+  * otherwise its body writes the output and returns its counters, and the
+  * manifest commits them with `wall_ms` (the body's wall time) and
+  * `committedAtMs` AFTER the output is fully written. So an interrupted
+  * build, merge or delete restarts without redoing finished stages, and
+  * the final store is identical (deterministic input + deterministic
+  * stages). Independent stages run as concurrent Spark jobs through
+  * [[concurrently]], which waits for all of them before it rethrows the
+  * first failure: nothing a stage started still runs when its caller
+  * returns or cleans up.
+  *
+  * Files: manifests, `collstats.json` and the stream high-water mark go
+  * through the Hadoop FileSystem of the store path, like the parquet
+  * tables, so a store written to a URI (file://, hdfs://) keeps all of
+  * its parts under that URI. A small file is written to `.<name>.tmp`
+  * beside it and renamed into place; the commit relies on the rename of
+  * one file being atomic, also when it replaces an existing file (a
+  * re-seal re-commits, the high-water mark moves per batch): POSIX
+  * rename(2) on a local disk; on HDFS, whose plain rename refuses an
+  * existing target, the rename with the OVERWRITE option, a single
+  * namenode operation.
   *
   * Scale shape (north rule): postings NEVER exist as per-posting rows —
   * each map task VByte-encodes its (term, field, bucket) runs directly
@@ -89,34 +108,112 @@ case class BuildConf(
 
 object IndexStore {
 
+  // ----------------------------------------------------------- store files
+
+  /** A store path on its Hadoop FileSystem (a plain path is local). */
+  private def fsPath(path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def exists(path: String): Boolean = {
+    val (fs, p) = fsPath(path)
+    fs.exists(p)
+  }
+
+  /** A small text file of a store, or None when there is none. */
+  private[graft] def readFile(path: String): Option[String] = {
+    val (fs, p) = fsPath(path)
+    try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Writes a small text file of a store by temp file + rename (see the
+    * header for the atomicity this relies on).
+    */
+  private[graft] def writeFile(path: String, text: String): Unit = {
+    val (fs, p) = fsPath(path)
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+    val o = fs.create(tmp, true)
+    try o.write(text.getBytes(UTF_8)) finally o.close()
+    if (!fs.rename(tmp, p)) // HDFS: a plain rename refuses an existing target
+      FileContext.getFileContext(fs.makeQualified(p).toUri, fs.getConf)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+  }
+
   // ------------------------------------------------------------- manifests
 
-  private def manifestDir(out: String) = s"$out/_manifests"
+  private def manifest(out: String, stage: String) = s"$out/_manifests/$stage.json"
 
   def isCommitted(out: String, stage: String): Boolean =
-    Files.exists(Paths.get(manifestDir(out), s"$stage.json"))
+    exists(manifest(out, stage))
 
-  def commit(out: String, stage: String, counters: Map[String, Long]): Unit = {
-    Files.createDirectories(Paths.get(manifestDir(out)))
-    val json = counters.map { case (k, v) => s""""$k": $v""" }
-      .mkString("{", ", ", s""", "stage": "$stage", "committedAtMs": ${System.currentTimeMillis()}}""")
-    val tmp = Paths.get(manifestDir(out), s".$stage.json.tmp")
-    Files.writeString(tmp, json)
-    // rename = atomic commit point
-    Files.move(tmp, Paths.get(manifestDir(out), s"$stage.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+  private def commit(out: String, stage: String, counters: Map[String, Long]): Unit =
+    writeFile(manifest(out, stage), counters.map { case (k, v) => s""""$k": $v""" }
+      .mkString("{", ", ", s""", "stage": "$stage", "committedAtMs": ${System.currentTimeMillis()}}"""))
+
+  /** Drops a stage's manifest, so that its next run rebuilds it. */
+  private[graft] def uncommit(out: String, stage: String): Unit = {
+    val (fs, p) = fsPath(manifest(out, stage))
+    fs.delete(p, false)
   }
 
-  def readManifest(out: String, stage: String): Option[String] = {
-    val p = Paths.get(manifestDir(out), s"$stage.json")
-    if (Files.exists(p)) Some(Files.readString(p)) else None
-  }
+  def readManifest(out: String, stage: String): Option[String] =
+    readFile(manifest(out, stage))
+
+  private def counter(json: String, key: String): Option[Long] =
+    (s""""$key":\\s*(-?\\d+)""").r.findFirstMatchIn(json).map(_.group(1).toLong)
 
   /** One numeric counter out of a committed stage manifest. */
   def manifestCounter(out: String, stage: String, key: String): Long =
-    readManifest(out, stage).flatMap { json =>
-      (s""""$key":\\s*(-?\\d+)""").r.findFirstMatchIn(json).map(_.group(1).toLong)
-    }.getOrElse(sys.error(s"no counter '$key' in manifest $stage at $out"))
+    readManifest(out, stage).flatMap(counter(_, key))
+      .getOrElse(sys.error(s"no counter '$key' in manifest $stage at $out"))
+
+  /** (stage, wall_ms) of every committed stage of a store, in commit
+    * order.
+    */
+  def stageWalls(out: String): Seq[(String, Long)] = {
+    val (fs, dir) = fsPath(s"$out/_manifests")
+    fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .collect { case n if n.endsWith(".json") => n.stripSuffix(".json") }
+      .flatMap(st => readManifest(out, st).map(st -> _))
+      .sortBy { case (_, json) => counter(json, "committedAtMs") }
+      .flatMap { case (st, json) => counter(json, "wall_ms").map(st -> _) }
+  }
+
+  /** Runs one stage of a store unless its manifest is committed: `body`
+    * writes the stage's output and returns its counters, which commit
+    * with the body's wall time as `wall_ms`.
+    */
+  private[graft] def stage(out: String, name: String)(
+      body: => Map[String, Long]): Unit =
+    if (!isCommitted(out, name)) {
+      val t0 = System.nanoTime()
+      val counters = body
+      commit(out, name, counters + ("wall_ms" -> (System.nanoTime() - t0) / 1000000L))
+    }
+
+  /** Runs independent bodies as concurrent Spark jobs (their driver and
+    * scheduling latencies overlap), waits for every one, then returns
+    * their results or rethrows the first failure (in argument order), so
+    * no sibling still runs when the caller cleans up. The global pool:
+    * use nests (a gate → two builds → their stages), so a fixed pool
+    * could deadlock; `Await` marks its wait as blocking, and the pool
+    * adds a thread for it.
+    */
+  private[graft] def concurrently[A](bodies: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // every Throwable goes back to the caller: a fatal error would leave
+    // its Future uncompleted and the wait below endless
+    val running = bodies.map(b =>
+      Future(try Right(b()) catch { case t: Throwable => Left(t) }))
+    running.map(Await.result(_, Duration.Inf))
+      .map { case Right(a) => a; case Left(t) => throw t }
+  }
 
   // ---------------------------------------------------------------- stages
 
@@ -180,7 +277,7 @@ object IndexStore {
 
   /** Counters observed on a minisegs write (shared batch/streaming). */
   private[graft] def miniObs(name: String) = {
-    val obs = org.apache.spark.sql.Observation(name)
+    val obs = Observation(name)
     val aggs = Seq(
       sum(when(col("term") =!= "", col("n")).otherwise(0)).cast("long").as("postings"),
       sum(when(col("term") =!= "", col("segCf")).otherwise(0)).cast("long").as("tokens"),
@@ -203,35 +300,39 @@ object IndexStore {
     math.max((totalDocs + conf.numBuckets - 1) / conf.numBuckets,
       math.max(1L, conf.bucketDocs))
 
-  /** Waits for every future, then rethrows the first failure (in `fs`
-    * order), so no sibling job still runs when the caller cleans up.
+  /** tb, the (field, tb) partition of a term's rows in segments and
+    * termstats.
     */
-  private def awaitAll(fs: Seq[scala.concurrent.Future[Unit]]): Unit = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val failures = fs.flatMap { f =>
-      try { Await.result(f, Duration.Inf); None }
-      catch { case NonFatal(e) => Some(e) }
-    }
-    failures.headOption.foreach(throw _)
+  private def termBucket(conf: BuildConf) =
+    pmod(xxhash64(col("term")), lit(conf.termBuckets))
+
+  // bounded row groups: the mini-segment scan parallelizes by byte range,
+  // but a range only reads row groups whose MIDPOINT it covers — with the
+  // parquet default (128 MB) the effective task granularity is one row
+  // group no matter what maxPartitionBytes asks for
+  private val DocmapOptions = Map("parquet.block.size" -> (16L << 20).toString)
+
+  /** Writes a per-doc table (docmap, docstats); its counter is its row
+    * count, "docs".
+    */
+  private def writeCounted(rows: DataFrame, path: String,
+                           options: Map[String, String] = Map.empty): Map[String, Long] = {
+    val obs = Observation()
+    rows.observe(obs, count(lit(1)).as("docs"))
+      .write.mode(SaveMode.Overwrite).options(options).parquet(path)
+    Map("docs" -> obs.get("docs").asInstanceOf[Long])
   }
 
   /** Full build. Each stage is skipped when already committed. */
   def build(pages: DataFrame, out: String,
             conf: BuildConf = BuildConf()): Unit = {
     val spark = pages.sparkSession
-    Files.createDirectories(Paths.get(out))
-    val tStart = System.nanoTime()
-    var tLast = tStart
-    def mark(stage: String): Unit = {
-      val now = System.nanoTime()
-      if (sys.env.contains("GRAFT_BUILD_TIMING"))
-        println(f"[build] $stage%-24s ${(now - tLast) / 1e9}%7.2fs  (total ${(now - tStart) / 1e9}%7.2fs)")
-      tLast = now
-    }
-
     val filtered = conf.langFilter
       .map(l => pages.filter(col("lang") === l)).getOrElse(pages)
+    // a single slice runs as one minis → segments action (fusedSegments)
+    // unless an earlier run got that far
+    val fused = conf.numSlices == 1 && !isCommitted(out, "minisegs-slice-0") &&
+      !isCommitted(out, "segments")
 
     // stage 0+1 DEEP-FUSED fast path: with a single slice and derived
     // split sizing (splitBytes == 0), the mini-segment stage's input can
@@ -242,137 +343,100 @@ object IndexStore {
     // path. The scaling bench pins splitBytes > 0 precisely so task
     // boundaries come from file splits (same work at every parallelism
     // level); that path below is byte-for-byte unchanged.
-    if (conf.numSlices == 1 && conf.splitBytes == 0L &&
-        !isCommitted(out, "docmap") && !isCommitted(out, "minisegs-slice-0") &&
-        !isCommitted(out, "segments")) {
-      val (ids, totalDocs0, release) =
+    if (fused && conf.splitBytes == 0L && !isCommitted(out, "docmap")) {
+      val (ids, totalDocs, release) =
         assignDocIds(filtered, conf.shufflePartitions)
-      val rangeSize0 = bucketSize(totalDocs0, conf)
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fDocmap = Future {
-        val obs = org.apache.spark.sql.Observation("docmap")
-        ids.observe(obs, count(lit(1)).as("docs"))
-          .write.mode(SaveMode.Overwrite)
-          .option("parquet.block.size", (16L << 20).toString)
-          .parquet(s"$out/docmap")
-        commit(out, "docmap",
-          Map("docs" -> obs.get("docs").asInstanceOf[Long]))
+      // both writers read the shared cache: release it once both end
+      try concurrently(
+        () => stage(out, "docmap")(writeCounted(ids, s"$out/docmap", DocmapOptions)),
+        () => fusedSegments(ids, bucketSize(totalDocs, conf), out, conf))
+      finally release()
+    } else {
+      // stage 0: docmap (url-sorted pages with dense docIds) ---------------
+      stage(out, "docmap") {
+        val (ids, _, release) = assignDocIds(filtered, conf.shufflePartitions)
+        try writeCounted(ids, s"$out/docmap", DocmapOptions) finally release()
       }
-      val fSegs = Future {
-        val minis = IndexBuilder.miniSegments(ids, rangeSize0).toDF()
-        val (obs, aggs) = miniObs("minisegs-0")
-        writeSegments(spark,
-          minis.observe(obs, aggs.head, aggs.tail: _*), out, conf,
-          keepSentinels = true)
-        commit(out, "minisegs-slice-0", miniCounters(obs.get) +
-          ("rangeSize" -> rangeSize0, "fused" -> 1L))
-      }
-      // await BOTH writers before releasing the shared cache, whichever
-      // fails: a sibling still running would read an unpersisted input
-      try awaitAll(Seq(fDocmap, fSegs)) finally release()
-      mark("docmap ∥ minisegs+segments (deep-fused)")
-      derivedStages(spark, out, conf, mark)
-      return
-    }
+      val totalDocs = manifestCounter(out, "docmap", "docs")
+      val rangeSize = bucketSize(totalDocs, conf)
 
-    // stage 0: docmap (url-sorted pages with dense docIds) -----------------
-    if (!isCommitted(out, "docmap")) {
-      val (ids, _, release) = assignDocIds(filtered, conf.shufflePartitions)
-      val obs = org.apache.spark.sql.Observation("docmap")
-      // bounded row groups: the mini-segment scan parallelizes by byte
-      // range, but a range only reads row groups whose MIDPOINT it covers —
-      // with the parquet default (128 MB) the effective task granularity is
-      // one row group no matter what maxPartitionBytes asks for
-      ids.observe(obs, count(lit(1)).as("docs"))
-        .write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size", (16L << 20).toString)
-        .parquet(s"$out/docmap")
-      commit(out, "docmap", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
-      release()
-    }
-    mark("docmap")
-    val totalDocs = manifestCounter(out, "docmap", "docs")
-    val rangeSize = bucketSize(totalDocs, conf)
-
-    // stage 1: mini-segments, one resumable docId-range slice at a time ----
-    // The scan's split size gates this stage's parallelism (it is the
-    // build's CPU-dominant stage): size splits so one slice yields ~2
-    // tasks per core instead of whatever the session default gives — but
-    // CAP the split at 64 MB: a task's accumulator live set (per-term
-    // encoders + emitted rows) is ~3× its input bytes, so the cap bounds
-    // executor memory PER TASK regardless of corpus or cluster size (an
-    // uncapped lo-level split at 480k docs reached ~180 MB input ≈ 0.5 GB
-    // live and OOM'd a 5 GB executor running 4 such tasks).
-    val sliceSize = math.max(1L, (totalDocs + conf.numSlices - 1) / conf.numSlices)
-    val docmapBytes = {
-      val p = Paths.get(out, "docmap")
-      val s = Files.list(p)
-      try s.mapToLong(f => Files.size(f)).sum finally s.close()
-    }
-    val splitTarget =
-      if (conf.splitBytes > 0) conf.splitBytes
-      else math.min(64L << 20, math.max(1L << 21,
-        docmapBytes / conf.numSlices / (conf.shufflePartitions * 2L)))
-    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", splitTarget.toString)
-    try {
-      if (conf.numSlices == 1 && !isCommitted(out, "minisegs-slice-0") &&
-          !isCommitted(out, "segments")) {
-        // Fused fast path: with a single slice the minisegs table buys no
-        // resume granularity, so tokenize→encode→shuffle→merge runs as ONE
-        // action and the mini-segment parquet round trip (its full byte
-        // volume written to and re-read from storage) disappears. Doclen
-        // sentinels ride the same shuffle into the segments table
-        // (term = ""), where docstats finds them.
-        val minis = IndexBuilder.miniSegments(
-          spark.read.parquet(s"$out/docmap"), rangeSize).toDF()
-        val (obs, aggs) = miniObs("minisegs-0")
-        writeSegments(spark,
-          minis.observe(obs, aggs.head, aggs.tail: _*), out, conf,
-          keepSentinels = true)
-        commit(out, "minisegs-slice-0", miniCounters(obs.get) +
-          ("rangeSize" -> rangeSize, "fused" -> 1L))
-        mark("minisegs+segments (fused)")
-      } else (0 until conf.numSlices).foreach { i =>
-        val stage = s"minisegs-slice-$i"
-        if (!isCommitted(out, stage)) {
+      // stage 1: mini-segments, one resumable docId-range slice at a time --
+      // The scan's split size gates this stage's parallelism (it is the
+      // build's CPU-dominant stage): size splits so one slice yields ~2
+      // tasks per core instead of whatever the session default gives — but
+      // CAP the split at 64 MB: a task's accumulator live set (per-term
+      // encoders + emitted rows) is ~3× its input bytes, so the cap bounds
+      // executor memory PER TASK regardless of corpus or cluster size (an
+      // uncapped lo-level split at 480k docs reached ~180 MB input ≈ 0.5 GB
+      // live and OOM'd a 5 GB executor running 4 such tasks).
+      val sliceSize = math.max(1L, (totalDocs + conf.numSlices - 1) / conf.numSlices)
+      val splitTarget =
+        if (conf.splitBytes > 0) conf.splitBytes
+        else {
+          val (fs, p) = fsPath(s"$out/docmap")
+          math.min(64L << 20, math.max(1L << 21, fs.getContentSummary(p).getLength
+            / conf.numSlices / (conf.shufflePartitions * 2L)))
+        }
+      // the split size lives in a session of its own, so the caller's
+      // conf — and any build or query running on it meanwhile — never
+      // sees it
+      val splitSession = spark.newSession()
+      splitSession.conf.set("spark.sql.files.maxPartitionBytes", splitTarget.toString)
+      def docmap = splitSession.read.parquet(s"$out/docmap")
+      if (fused) fusedSegments(docmap, rangeSize, out, conf)
+      else (0 until conf.numSlices).foreach { i =>
+        stage(out, s"minisegs-slice-$i") {
           // docmap files are docId-sorted: the range filter prunes row groups
-          val slice = spark.read.parquet(s"$out/docmap")
-            .filter(col("docId") >= i * sliceSize &&
-              col("docId") < (i + 1L) * sliceSize)
+          val slice = docmap.filter(col("docId") >= i * sliceSize &&
+            col("docId") < (i + 1L) * sliceSize)
           val (obs, aggs) = miniObs(s"minisegs-$i")
           IndexBuilder.miniSegments(slice, rangeSize).toDF()
             .observe(obs, aggs.head, aggs.tail: _*)
             .write.mode(SaveMode.Overwrite)
             .parquet(s"$out/minisegs/slice=$i")
-          commit(out, stage, miniCounters(obs.get) +
-            ("rangeSize" -> rangeSize))
+          miniCounters(obs.get) + ("rangeSize" -> rangeSize)
         }
-        mark(stage)
       }
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-    derivedStages(spark, out, conf, mark)
+    }
+    derivedStages(spark, out, conf)
+  }
+
+  /** The single-slice chain: with one slice the minisegs table buys no
+    * resume granularity, so tokenize→encode→shuffle→merge runs as ONE
+    * action and the mini-segment parquet round trip (its full byte volume
+    * written to and re-read from storage) disappears. Doclen sentinels
+    * ride the same shuffle into the segments table (term = ""), where
+    * docstats finds them. Commits segments, then minisegs-slice-0 with the
+    * counters observed on the way; callers run it only while neither is
+    * committed (a skipped segments stage would never run that action).
+    */
+  private def fusedSegments(docs: DataFrame, rangeSize: Long, out: String,
+                            conf: BuildConf): Unit =
+    stage(out, "minisegs-slice-0") {
+      val (obs, aggs) = miniObs("minisegs-0")
+      val minis = IndexBuilder.miniSegments(docs, rangeSize).toDF()
+        .observe(obs, aggs.head, aggs.tail: _*)
+      stage(out, "segments")(writeSegmentTable(mergeMinis(minis, conf), out, conf))
+      miniCounters(obs.get) ++ Map("rangeSize" -> rangeSize, "fused" -> 1L)
+    }
+
+  private val SegCols = Seq("term", "field", "bucket", "n", "firstDocId",
+    "lastDocId", "segCf", "blob", "blockFirst", "blockOff",
+    "blockMaxTf", "blockMinDl", "blockN")
+
+  private def segRows(spark: SparkSession, dir: String): Dataset[SegmentRow] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/segments").select(SegCols.map(col): _*).as[SegmentRow]
   }
 
   /** stage 2: segments — merge minis per (term, field, bucket).
     * One shuffle of pre-encoded rows, keyed by the OUTPUT partition
     * (field, tb) so every directory is written by the task that merged it
     * (no second move); within a task groups are streamed in sorted order
-    * and byte-concatenated (SegmentMerger). With `keepSentinels` the
-    * doclen sentinel rows (term = "") ride the same shuffle into the
-    * segments table — the fused single-slice build has no minisegs table
-    * for docstats to read otherwise.
+    * and byte-concatenated (SegmentMerger).
     */
-  private def writeSegments(spark: SparkSession, minis0: DataFrame,
-                            out: String, conf: BuildConf,
-                            keepSentinels: Boolean): Unit = {
-    import spark.implicits._
-    val segCols = Seq("term", "field", "bucket", "n", "firstDocId",
-      "lastDocId", "segCf", "blob", "blockFirst", "blockOff",
-      "blockMaxTf", "blockMinDl", "blockN")
-    val minis =
-      if (keepSentinels) minis0 else minis0.filter(col("term") =!= "")
+  private def mergeMinis(minis: DataFrame, conf: BuildConf): Dataset[SegmentRow] = {
+    import minis.sparkSession.implicits._
     // shuffle key includes the docId-range bucket: (field, tb) alone is
     // 4×termBuckets coarse keys whose byte weight is wildly skewed (the
     // default field dominates), so reducers straggled; buckets are
@@ -382,11 +446,11 @@ object IndexStore {
     val segParts =
       if (conf.segmentPartitions > 0) conf.segmentPartitions
       else conf.shufflePartitions
-    val merged = minis
-      .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
+    minis
+      .withColumn("tb", termBucket(conf))
       .repartition(segParts, col("field"), col("tb"), col("bucket"))
       .sortWithinPartitions("term", "field", "bucket", "firstDocId")
-      .select(segCols.map(col): _*)
+      .select(SegCols.map(col): _*)
       .as[SegmentRow]
       .mapPartitions { it =>
         val in = it.buffered
@@ -417,16 +481,22 @@ object IndexStore {
           }
         }
       }
+  }
 
-    val obs = org.apache.spark.sql.Observation("segments")
-    merged.toDF()
-      .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
+  /** Writes the segments table — for the build, merge and delete alike —
+    * and returns its counters over real terms (doclen sentinel rows, which
+    * a fused build keeps here, are not counted).
+    */
+  private def writeSegmentTable(rows: Dataset[SegmentRow], out: String,
+                                conf: BuildConf): Map[String, Long] = {
+    val obs = Observation()
+    val real = col("term") =!= ""
+    rows.toDF()
+      .withColumn("tb", termBucket(conf))
       .observe(obs,
-        count(when(col("term") =!= "", 1)).cast("long").as("segments"),
-        sum(when(col("term") =!= "", length(col("blob"))).otherwise(0))
-          .cast("long").as("bytes"),
-        sum(when(col("term") =!= "", col("n")).otherwise(0))
-          .cast("long").as("postings"))
+        count(when(real, 1)).cast("long").as("segments"),
+        sum(when(real, length(col("blob"))).otherwise(0)).cast("long").as("bytes"),
+        sum(when(real, col("n")).otherwise(0)).cast("long").as("postings"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("field", "tb")
       // the blob column IS the compression (docId-delta varints);
@@ -435,132 +505,102 @@ object IndexStore {
       .option("compression", "none")
       .parquet(s"$out/segments")
     val m = obs.get
-    commit(out, "segments", Map(
-      "segments" -> m("segments").asInstanceOf[Long],
-      "bytes" -> m("bytes").asInstanceOf[Long],
-      "postings" -> m("postings").asInstanceOf[Long]))
+    Seq("segments", "bytes", "postings").map(k => k -> m(k).asInstanceOf[Long]).toMap
   }
+
+  /** Writes the termstats table: (term, field) → the sums of `rows`' `df`
+    * and `cf` columns, partitioned by tb so point lookups prune.
+    */
+  private def writeTermstats(rows: DataFrame, df: String, cf: String,
+                             out: String, conf: BuildConf): Map[String, Long] = {
+    val obs = Observation()
+    rows.groupBy("term", "field")
+      .agg(sum(df).cast("long").as("df"), sum(cf).cast("long").as("cf"))
+      .withColumn("tb", termBucket(conf))
+      .repartition(col("tb"))
+      .observe(obs, count(lit(1)).as("terms"))
+      .write.mode(SaveMode.Overwrite).partitionBy("tb")
+      .parquet(s"$out/termstats")
+    Map("terms" -> obs.get("terms").asInstanceOf[Long])
+  }
+
+  /** stage 3: termstats from the store's own segments table (a tiny
+    * aggregation; fused builds carry sentinel rows there, filtered out).
+    */
+  private def segmentTermstats(spark: SparkSession, out: String,
+                               conf: BuildConf): Unit =
+    stage(out, "termstats")(writeTermstats(
+      spark.read.parquet(s"$out/segments").filter(col("term") =!= ""),
+      "n", "segCf", out, conf))
 
   /** Derived tables (segments, termstats, docstats, collstats) over
     * whatever minisegs slices exist — shared by the batch build and the
-    * streaming indexer's seal. Each stage commits/skips via the manifest.
+    * streaming indexer's seal. Each is a [[stage]]; termstats (reads the
+    * merged segments) and docstats (reads minisegs + docmap) are
+    * independent and run [[concurrently]].
     */
-  def derivedStages(spark: SparkSession, out: String, conf: BuildConf,
-                    mark: String => Unit = _ => ()): Unit = {
+  def derivedStages(spark: SparkSession, out: String, conf: BuildConf): Unit = {
     import spark.implicits._
-    val hasMinisegs = Files.exists(Paths.get(out, "minisegs"))
-
-    if (!isCommitted(out, "segments")) {
-      writeSegments(spark, spark.read.parquet(s"$out/minisegs"), out, conf,
-        keepSentinels = false)
-    }
-    mark("segments")
-
-    /** Doclen sentinel rows (field, n, blob): from the minisegs table when
-      * it exists, else from the segments table (fused build wrote them
-      * there under term = "").
-      */
-    def sentinels: DataFrame =
-      if (hasMinisegs)
-        spark.read.parquet(s"$out/minisegs").filter(col("term") === "")
-      else
-        spark.read.parquet(s"$out/segments").filter(col("term") === "")
-
-    // stages 3+4 are independent of each other (termstats reads merged
-    // segments, docstats reads minisegs+docmap): run them as concurrent
-    // jobs so their driver/scheduling latencies overlap
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-
-    // stage 3: termstats from the merged segments (tiny aggregation;
-    // partitioned by tb so point lookups prune) ---------------------------
-    val fTermstats = Future { if (!isCommitted(out, "termstats")) {
-      val obs = org.apache.spark.sql.Observation("termstats")
-      spark.read.parquet(s"$out/segments")
-        .filter(col("term") =!= "") // fused builds carry sentinels here
-        .groupBy("term", "field")
-        .agg(sum("n").cast("long").as("df"), sum("segCf").cast("long").as("cf"))
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
-        .repartition(col("tb"))
-        .observe(obs, count(lit(1)).as("terms"))
-        .write.mode(SaveMode.Overwrite).partitionBy("tb")
-        .parquet(s"$out/termstats")
-      commit(out, "termstats",
-        Map("terms" -> obs.get("terms").asInstanceOf[Long]))
-    } }
-
-    // stage 4: docstats from the doclen sentinel rows + collstats ----------
-    val fDocstats = Future { if (!isCommitted(out, "docstats")) {
-      val doclens = sentinels
-        .select("field", "n", "blob").as[(String, Int, Array[Byte])]
-        .flatMap { case (f, n, blob) =>
-          // sentinel postings carry the doc length in dl (tf = 0)
-          Codec.decode(blob, n).map(p => (p.docId, f, p.dl))
-        }
-        .toDF("docId", "field", "dl")
-      val lens = doclens.groupBy("docId").agg(
-          max(when(col("field") === "default", col("dl"))).as("len_default"),
-          max(when(col("field") === "title", col("dl"))).as("len_title"),
-          max(when(col("field") === "body", col("dl"))).as("len_body"),
-          max(when(col("field") === "url", col("dl"))).as("len_url"))
-        .na.fill(0)
-      val docmap = spark.read.parquet(s"$out/docmap").select("url", "docId")
-      val obs = org.apache.spark.sql.Observation("docstats")
-      lens.join(docmap, "docId")
-        .observe(obs, count(lit(1)).as("docs"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/docstats")
-      commit(out, "docstats", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
-    } }
-    Await.result(fTermstats, Duration.Inf)
-    mark("termstats")
-    Await.result(fDocstats, Duration.Inf)
-    mark("docstats")
-
+    stage(out, "segments")(writeSegmentTable(mergeMinis(
+      spark.read.parquet(s"$out/minisegs").filter(col("term") =!= ""), conf), out, conf))
+    concurrently(
+      () => segmentTermstats(spark, out, conf),
+      // stage 4: docstats from the doclen sentinel rows: in the minisegs
+      // table when it exists, else in the segments table (the fused build
+      // wrote them there under term = "")
+      () => stage(out, "docstats") {
+        val sentinels = spark.read.parquet(
+          if (exists(s"$out/minisegs")) s"$out/minisegs" else s"$out/segments")
+          .filter(col("term") === "")
+        val doclens = sentinels
+          .select("field", "n", "blob").as[(String, Int, Array[Byte])]
+          .flatMap { case (f, n, blob) =>
+            // sentinel postings carry the doc length in dl (tf = 0)
+            Codec.decode(blob, n).map(p => (p.docId, f, p.dl))
+          }
+          .toDF("docId", "field", "dl")
+        val lens = doclens.groupBy("docId").agg(
+            max(when(col("field") === "default", col("dl"))).as("len_default"),
+            max(when(col("field") === "title", col("dl"))).as("len_title"),
+            max(when(col("field") === "body", col("dl"))).as("len_body"),
+            max(when(col("field") === "url", col("dl"))).as("len_url"))
+          .na.fill(0)
+        val docmap = spark.read.parquet(s"$out/docmap").select("url", "docId")
+        writeCounted(lens.join(docmap, "docId"), s"$out/docstats")
+      })
     writeCollstats(spark, out)
-    mark("collstats")
   }
 
   /** stage 5: collstats.json from the already-built small tables (no
     * postings rescan) — shared by the batch build, the streaming seal,
     * and the store merge.
     */
-  private def writeCollstats(spark: SparkSession, out: String): Unit = {
-    if (!isCommitted(out, "collstats")) {
-      // the two source aggregations read different tables — run them as
-      // concurrent jobs (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fDc = Future {
-        spark.read.parquet(s"$out/docstats").agg(
+  private def writeCollstats(spark: SparkSession, out: String): Unit =
+    stage(out, "collstats") {
+      // the two source aggregations read different tables (guide §2.6)
+      val Seq(docRow, perField) = concurrently(
+        () => spark.read.parquet(s"$out/docstats").agg(
           sum(when(col("len_default") > 0, 1L).otherwise(0L)),
           sum(when(col("len_title") > 0, 1L).otherwise(0L)),
           sum(when(col("len_body") > 0, 1L).otherwise(0L)),
-          sum(when(col("len_url") > 0, 1L).otherwise(0L))).collect()(0)
-      }
-      val fPf = Future {
-        spark.read.parquet(s"$out/termstats")
+          sum(when(col("len_url") > 0, 1L).otherwise(0L))).collect(),
+        () => spark.read.parquet(s"$out/termstats")
           .groupBy("field").agg(
             count(lit(1)).as("vocabSize"),
-            sum("cf").cast("long").as("wordCount")).collect()
-      }
-      val dcRow = Await.result(fDc, Duration.Inf)
+            sum("cf").cast("long").as("wordCount")).collect())
       val docCounts = Seq("default", "title", "body", "url").zipWithIndex
-        .map { case (f, i) => f -> dcRow.getLong(i) }.toMap
+        .map { case (f, i) => f -> docRow(0).getLong(i) }.toMap
       // field order, so equal stores write byte-identical files
-      val rows = Await.result(fPf, Duration.Inf).sortBy(_.getString(0)).map { r =>
+      val rows = perField.sortBy(_.getString(0)).map { r =>
         val field = r.getString(0)
         val dc = docCounts(field)
         val vocab = r.getLong(1)
         val wc = r.getLong(2)
         s"""  "$field": {"docCount": $dc, "vocabSize": $vocab, "wordCount": $wc, "avgDocLen": ${if (dc == 0) 0.0 else wc.toDouble / dc}}"""
       }
-      Files.writeString(Paths.get(out, "collstats.json"),
-        rows.mkString("{\n", ",\n", "\n}"))
-      commit(out, "collstats", Map("fields" -> rows.length.toLong))
+      writeFile(s"$out/collstats.json", rows.mkString("{\n", ",\n", "\n}"))
+      Map("fields" -> rows.length.toLong)
     }
-  }
 
   // ----------------------------------------------------------------- merge
 
@@ -575,9 +615,11 @@ object IndexStore {
     * partitionBy write reuses the input clustering (each scan task holds
     * rows of one directory). Derived tables merge algebraically — termstats
     * df/cf add per (term, field), docstats/docmap union with the offset,
-    * collstats recomputes from the merged small tables. Every stage
-    * commits a manifest, so an interrupted or repeated merge resumes /
-    * no-ops exactly like the build.
+    * collstats recomputes from the merged small tables. The four table
+    * merges read only the two input stores, so they run [[concurrently]];
+    * collstats, which reads the merged tables, follows. Every table is a
+    * [[stage]], so an interrupted or repeated merge resumes / no-ops
+    * exactly like the build.
     *
     * Preconditions: both stores sealed (collstats committed), built with
     * the SAME termBuckets (conf.termBuckets must match them — term→tb
@@ -590,99 +632,44 @@ object IndexStore {
     import spark.implicits._
     require(isCommitted(aDir, "collstats") && isCommitted(bDir, "collstats"),
       s"mergeStores needs two sealed stores (collstats manifest missing)")
-    Files.createDirectories(Paths.get(out))
     val nA = manifestCounter(aDir, "docmap", "docs")
-    val nB = manifestCounter(bDir, "docmap", "docs")
-
-    // The four table merges are pairwise independent (docmap, segments,
-    // termstats, docstats read only the two INPUT stores); each is a
-    // small job whose wall is dominated by driver/scheduling latency, so
-    // they run as concurrent jobs (guide §2.6) and only collstats — which
-    // reads the merged smalls — waits for them. Resume safety is
-    // unchanged: every stage still commits its own manifest.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-
-    val fDocmap = Future { if (!isCommitted(out, "docmap")) {
-      // by name: a streamed store's docmap also has its batch= partition
-      def docmap(dir: String) =
-        spark.read.parquet(s"$dir/docmap").select("url", "docId", "text", "lang")
-      docmap(aDir)
-        .unionByName(docmap(bDir).withColumn("docId", col("docId") + nA))
-        .write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size", (16L << 20).toString)
-        .parquet(s"$out/docmap")
-      commit(out, "docmap", Map("docs" -> (nA + nB)))
-    } }
-
-    val fSegments = Future { if (!isCommitted(out, "segments")) {
-      val segCols = Seq("term", "field", "bucket", "n", "firstDocId",
-        "lastDocId", "segCf", "blob", "blockFirst", "blockOff",
-        "blockMaxTf", "blockMinDl", "blockN")
-      def segRows(dir: String) = spark.read.parquet(s"$dir/segments")
-        .select(segCols.map(col): _*).as[SegmentRow]
-      // Buckets are docId-range ordinals and every rebased B docId is
-      // greater than every A docId, so B's buckets order after A's whole
-      // range: offset them past A's max (one column-pruned metadata scan).
-      val bucketOff = spark.read.parquet(s"$aDir/segments")
-        .agg(max("bucket")).collect()(0).getInt(0) + 1
-      val rebased = segRows(bDir).map { r =>
-        val (blob, shift) = Codec.rebaseBlob(r.blob, nA)
-        r.copy(bucket = r.bucket + bucketOff,
-          firstDocId = r.firstDocId + nA, lastDocId = r.lastDocId + nA,
-          blob = blob,
-          blockFirst = r.blockFirst.map(_ + nA),
-          // block 0 starts at byte 0 (the rewritten vlong); every later
-          // block starts past the old header and shifts with it
-          blockOff = r.blockOff.map(o => if (o == 0) 0 else o + shift))
-      }
-      val obs = org.apache.spark.sql.Observation("merge-segments")
-      segRows(aDir).union(rebased).toDF()
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
-        .observe(obs,
-          count(when(col("term") =!= "", 1)).cast("long").as("segments"),
-          sum(when(col("term") =!= "", length(col("blob"))).otherwise(0))
-            .cast("long").as("bytes"),
-          sum(when(col("term") =!= "", col("n")).otherwise(0))
-            .cast("long").as("postings"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("field", "tb")
-        .option("compression", "none")
-        .parquet(s"$out/segments")
-      val m = obs.get
-      commit(out, "segments", Map(
-        "segments" -> m("segments").asInstanceOf[Long],
-        "bytes" -> m("bytes").asInstanceOf[Long],
-        "postings" -> m("postings").asInstanceOf[Long]))
-    } }
-
-    val fTermstats = Future { if (!isCommitted(out, "termstats")) {
-      val obs = org.apache.spark.sql.Observation("merge-termstats")
-      def ts(dir: String) = spark.read.parquet(s"$dir/termstats")
-        .select("term", "field", "df", "cf")
-      ts(aDir).unionByName(ts(bDir))
-        .groupBy("term", "field")
-        .agg(sum("df").cast("long").as("df"), sum("cf").cast("long").as("cf"))
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
-        .repartition(col("tb"))
-        .observe(obs, count(lit(1)).as("terms"))
-        .write.mode(SaveMode.Overwrite).partitionBy("tb")
-        .parquet(s"$out/termstats")
-      commit(out, "termstats",
-        Map("terms" -> obs.get("terms").asInstanceOf[Long]))
-    } }
-
-    val fDocstats = Future { if (!isCommitted(out, "docstats")) {
-      val obs = org.apache.spark.sql.Observation("merge-docstats")
-      spark.read.parquet(s"$aDir/docstats")
-        .unionByName(spark.read.parquet(s"$bDir/docstats")
-          .withColumn("docId", col("docId") + nA))
-        .observe(obs, count(lit(1)).as("docs"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/docstats")
-      commit(out, "docstats", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
-    } }
-
-    awaitAll(Seq(fDocmap, fSegments, fTermstats, fDocstats))
+    concurrently(
+      () => stage(out, "docmap") {
+        // by name: a streamed store's docmap also has its batch= partition
+        def docmap(dir: String) =
+          spark.read.parquet(s"$dir/docmap").select("url", "docId", "text", "lang")
+        writeCounted(docmap(aDir)
+          .unionByName(docmap(bDir).withColumn("docId", col("docId") + nA)),
+          s"$out/docmap", DocmapOptions)
+      },
+      () => stage(out, "segments") {
+        // Buckets are docId-range ordinals and every rebased B docId is
+        // greater than every A docId, so B's buckets order after A's whole
+        // range: offset them past A's max (one column-pruned metadata scan).
+        val bucketOff = spark.read.parquet(s"$aDir/segments")
+          .agg(max("bucket")).collect()(0).getInt(0) + 1
+        val rebased = segRows(spark, bDir).map { r =>
+          val (blob, shift) = Codec.rebaseBlob(r.blob, nA)
+          r.copy(bucket = r.bucket + bucketOff,
+            firstDocId = r.firstDocId + nA, lastDocId = r.lastDocId + nA,
+            blob = blob,
+            blockFirst = r.blockFirst.map(_ + nA),
+            // block 0 starts at byte 0 (the rewritten vlong); every later
+            // block starts past the old header and shifts with it
+            blockOff = r.blockOff.map(o => if (o == 0) 0 else o + shift))
+        }
+        writeSegmentTable(segRows(spark, aDir).union(rebased), out, conf)
+      },
+      () => stage(out, "termstats") {
+        def ts(dir: String) = spark.read.parquet(s"$dir/termstats")
+          .select("term", "field", "df", "cf")
+        writeTermstats(ts(aDir).unionByName(ts(bDir)), "df", "cf", out, conf)
+      },
+      () => stage(out, "docstats")(writeCounted(
+        spark.read.parquet(s"$aDir/docstats")
+          .unionByName(spark.read.parquet(s"$bDir/docstats")
+            .withColumn("docId", col("docId") + nA)),
+        s"$out/docstats")))
     writeCollstats(spark, out)
   }
 
@@ -699,121 +686,64 @@ object IndexStore {
     * decoded, filtered, and re-encoded in place. No shuffle on the
     * postings path (the write reuses the input (field, tb) clustering);
     * docmap/docstats anti-join the url set, termstats recomputes from the
-    * new segments, collstats from the merged smalls. Manifest-committed
-    * per stage like the build: interrupted deletes resume, repeats no-op.
+    * new segments, collstats from the merged smalls. The segments →
+    * termstats chain and the two anti-joins read only the input store and
+    * run [[concurrently]], collstats last. Every table is a [[stage]] like
+    * the build's: interrupted deletes resume, repeats no-op.
     */
   def deleteDocs(spark: SparkSession, dir: String, out: String,
                  urls: DataFrame, conf: BuildConf = BuildConf()): Unit = {
     import spark.implicits._
     require(isCommitted(dir, "collstats"),
       "deleteDocs needs a sealed store (collstats manifest missing)")
-    Files.createDirectories(Paths.get(out))
     val delUrls = urls.select("url").distinct()
-
-    // Stage dependencies: termstats reads the REWRITTEN segments, but
-    // docmap and docstats only read the input store — so the
-    // segments→termstats chain and the two url anti-joins run as
-    // concurrent jobs (guide §2.6), with collstats last. Manifest
-    // commit/skip per stage is unchanged.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-
-    val fSegTerm = Future {
-    if (!isCommitted(out, "segments")) {
-      val delIds = spark.read.parquet(s"$dir/docmap")
-        .join(delUrls, "url").select("docId").as[Long].collect().sorted
-      val delB = spark.sparkContext.broadcast(delIds)
-      val segCols = Seq("term", "field", "bucket", "n", "firstDocId",
-        "lastDocId", "segCf", "blob", "blockFirst", "blockOff",
-        "blockMaxTf", "blockMinDl", "blockN")
-      val filtered = spark.read.parquet(s"$dir/segments")
-        .select(segCols.map(col): _*).as[SegmentRow]
-        .mapPartitions { it =>
-          val del = delB.value
-          def anyIn(first: Long, last: Long): Boolean = {
-            var i = java.util.Arrays.binarySearch(del, first)
-            if (i < 0) i = -i - 1
-            i < del.length && del(i) <= last
-          }
-          it.flatMap { r =>
-            if (!anyIn(r.firstDocId, r.lastDocId)) Iterator.single(r)
-            else {
-              // doclen sentinel rows (term = "", tf = 0, no positions)
-              // re-encode through the same path byte-compatibly
-              val enc = new Codec.SegmentEncoder
-              Codec.decode(r.blob, r.n).foreach { p =>
-                if (java.util.Arrays.binarySearch(del, p.docId) < 0)
-                  enc.addPositions(p.docId, p.dl, p.positions,
-                    p.positions.length)
+    def survivors(table: String) =
+      spark.read.parquet(s"$dir/$table").join(delUrls, Seq("url"), "left_anti")
+    concurrently(
+      () => {
+        stage(out, "segments") {
+          val delIds = spark.read.parquet(s"$dir/docmap")
+            .join(delUrls, "url").select("docId").as[Long].collect().sorted
+          val delB = spark.sparkContext.broadcast(delIds)
+          val filtered = segRows(spark, dir).mapPartitions { it =>
+            val del = delB.value
+            def anyIn(first: Long, last: Long): Boolean = {
+              var i = java.util.Arrays.binarySearch(del, first)
+              if (i < 0) i = -i - 1
+              i < del.length && del(i) <= last
+            }
+            it.flatMap { r =>
+              if (!anyIn(r.firstDocId, r.lastDocId)) Iterator.single(r)
+              else {
+                // doclen sentinel rows (term = "", tf = 0, no positions)
+                // re-encode through the same path byte-compatibly
+                val enc = new Codec.SegmentEncoder
+                Codec.decode(r.blob, r.n).foreach { p =>
+                  if (java.util.Arrays.binarySearch(del, p.docId) < 0)
+                    enc.addPositions(p.docId, p.dl, p.positions,
+                      p.positions.length)
+                }
+                val s = enc.finish()
+                if (s.n == 0) Iterator.empty
+                else Iterator.single(SegmentRow(r.term, r.field, r.bucket,
+                  s.n, s.firstDocId, s.lastDocId, s.cf, s.blob, s.blockFirst,
+                  s.blockOff, s.blockMaxTf, s.blockMinDl, s.blockN))
               }
-              val s = enc.finish()
-              if (s.n == 0) Iterator.empty
-              else Iterator.single(SegmentRow(r.term, r.field, r.bucket,
-                s.n, s.firstDocId, s.lastDocId, s.cf, s.blob, s.blockFirst,
-                s.blockOff, s.blockMaxTf, s.blockMinDl, s.blockN))
             }
           }
+          try writeSegmentTable(filtered, out, conf) +
+            ("deletedDocs" -> delIds.length.toLong)
+          finally delB.destroy()
         }
-      val obs = org.apache.spark.sql.Observation("delete-segments")
-      filtered.toDF()
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
-        .observe(obs,
-          count(when(col("term") =!= "", 1)).cast("long").as("segments"),
-          sum(when(col("term") =!= "", length(col("blob"))).otherwise(0))
-            .cast("long").as("bytes"),
-          sum(when(col("term") =!= "", col("n")).otherwise(0))
-            .cast("long").as("postings"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("field", "tb")
-        .option("compression", "none")
-        .parquet(s"$out/segments")
-      val m = obs.get
-      commit(out, "segments", Map(
-        "segments" -> m("segments").asInstanceOf[Long],
-        "bytes" -> m("bytes").asInstanceOf[Long],
-        "postings" -> m("postings").asInstanceOf[Long],
-        "deletedDocs" -> delIds.length.toLong))
-      delB.destroy()
-    }
-    if (!isCommitted(out, "termstats")) {
-      val obs = org.apache.spark.sql.Observation("delete-termstats")
-      spark.read.parquet(s"$out/segments")
-        .filter(col("term") =!= "")
-        .groupBy("term", "field")
-        .agg(sum("n").cast("long").as("df"), sum("segCf").cast("long").as("cf"))
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(conf.termBuckets)))
-        .repartition(col("tb"))
-        .observe(obs, count(lit(1)).as("terms"))
-        .write.mode(SaveMode.Overwrite).partitionBy("tb")
-        .parquet(s"$out/termstats")
-      commit(out, "termstats",
-        Map("terms" -> obs.get("terms").asInstanceOf[Long]))
-    }
-    }
-
-    val fDocmap = Future { if (!isCommitted(out, "docmap")) {
-      val obs = org.apache.spark.sql.Observation("delete-docmap")
-      spark.read.parquet(s"$dir/docmap")
-        .join(delUrls, Seq("url"), "left_anti")
-        .observe(obs, count(lit(1)).as("docs"))
-        .write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size", (16L << 20).toString)
-        .parquet(s"$out/docmap")
-      commit(out, "docmap", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
-    } }
-
-    val fDocstats = Future { if (!isCommitted(out, "docstats")) {
-      val obs = org.apache.spark.sql.Observation("delete-docstats")
-      spark.read.parquet(s"$dir/docstats")
-        .join(delUrls, Seq("url"), "left_anti")
-        .observe(obs, count(lit(1)).as("docs"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/docstats")
-      commit(out, "docstats", Map("docs" -> obs.get("docs").asInstanceOf[Long]))
-    } }
-
-    awaitAll(Seq(fSegTerm, fDocmap, fDocstats))
+        segmentTermstats(spark, out, conf)
+      },
+      () => stage(out, "docmap")(
+        writeCounted(survivors("docmap"), s"$out/docmap", DocmapOptions)),
+      () => stage(out, "docstats")(
+        writeCounted(survivors("docstats"), s"$out/docstats")))
     writeCollstats(spark, out)
   }
+
 
   // ----------------------------------------------------------------- reader
 
@@ -858,12 +788,8 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
     scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]
 
   lazy val collStats: CollStats = {
-    // through the store path's Hadoop FileSystem, like every other read
-    // here, so a store opened by URI (file://, a cluster FS) works too
-    val p = new org.apache.hadoop.fs.Path(s"$dir/collstats.json")
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
+    val json = IndexStore.readFile(s"$dir/collstats.json")
+      .getOrElse(sys.error(s"no collstats.json in $dir"))
     // tiny fixed-shape JSON; parse the "default" object fields
     def field(name: String, obj: String): String = {
       val m = (s""""$name":\\s*([-0-9.eE]+)""").r.findFirstMatchIn(obj)

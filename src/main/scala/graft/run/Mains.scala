@@ -27,6 +27,12 @@ object Mains {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The per-stage wall times a store's manifests record, in commit order. */
+  def printStageWalls(dir: String): Unit =
+    IndexStore.stageWalls(dir).foreach { case (stage, ms) =>
+      println(f"[build] $stage%-24s ${ms / 1e3}%7.2fs")
+    }
 }
 
 /** Index job: pages parquet (or `synthetic:N` for the deterministic
@@ -35,7 +41,9 @@ object Mains {
   * Usage: IndexMain <input> <outDir> [numSlices] [numBuckets]
   * (numBuckets caps the docId-range bucket count: buckets never hold
   * fewer than `BuildConf.bucketDocs` = 65,536 docs, so the cap binds only
-  * past numBuckets × 65,536 docs).
+  * past numBuckets × 65,536 docs). After the build it prints each stage's
+  * wall time as the store's manifests record it (`wall_ms`); stages a
+  * resumed build skipped show the time of the run that committed them.
   */
 object IndexMain {
   def main(args: Array[String]): Unit = {
@@ -53,6 +61,7 @@ object IndexMain {
     val t0 = System.nanoTime()
     IndexStore.build(pages, args(1), conf)
     println(f"index build wall: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    Mains.printStageWalls(args(1))
     spark.stop()
   }
 }
@@ -196,7 +205,8 @@ object QueryMain {
 
 /** Per-stage build profiler: replicates graft.Bench's scaling methodology
   * (fresh session per level, in-JVM warm-up, repeated timed builds on
-  * tmpfs) but prints the GRAFT_BUILD_TIMING stage breakdown per run so
+  * tmpfs) but prints, per run, the task metrics of every Spark stage and
+  * the wall time of every store stage (from the store's manifests), so
   * non-scaling stages are visible.
   *
   * Usage: BuildProf <cpusCsv> <numDocs> [runsPerLevel]
@@ -245,7 +255,7 @@ object BuildProf {
           override def onStageCompleted(
               sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
             val m = sc.stageInfo.taskMetrics
-            if (m != null && sys.env.contains("GRAFT_BUILD_TIMING")) {
+            if (m != null) {
               val wall = (for {
                 s <- sc.stageInfo.submissionTime; e <- sc.stageInfo.completionTime
               } yield e - s).getOrElse(0L)
@@ -277,6 +287,7 @@ object BuildProf {
         IndexStore.build(pages, dir, conf)
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"== $master $tag: $dt%.2f s  (${n / dt}%.0f docs/s)")
+        Mains.printStageWalls(dir)
         // free the tmpfs store before the next run (see Bench.timedBuild)
         try new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
         catch { case _: Throwable => }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.index.{BuildConf, IndexBuilder, IndexStore}
-import java.nio.file.{Files, Paths}
 
 /** Incremental index ingestion over a Structured Streaming source of pages
   * (same input_hint shape as the batch build).
@@ -26,16 +25,10 @@ import java.nio.file.{Files, Paths}
   */
 object StreamingIndexer {
 
-  private def hwmPath(out: String) = Paths.get(s"$out/_manifests/docid-hwm")
+  private def hwmPath(out: String) = s"$out/_manifests/docid-hwm"
 
   private def readHwm(out: String): Long =
-    if (Files.exists(hwmPath(out))) Files.readString(hwmPath(out)).trim.toLong
-    else 0L
-
-  private def writeHwm(out: String, v: Long): Unit = {
-    Files.createDirectories(hwmPath(out).getParent)
-    Files.writeString(hwmPath(out), v.toString)
-  }
+    IndexStore.readFile(hwmPath(out)).map(_.trim.toLong).getOrElse(0L)
 
   /** Process one micro-batch: assign docIds from the high-water mark,
     * append docmap shard + minisegs slice, commit the batch manifest.
@@ -48,47 +41,38 @@ object StreamingIndexer {
     * size, so the two paths produce the same layout.
     */
   def processBatch(batch: DataFrame, batchId: Long, out: String,
-                   conf: BuildConf): Unit = {
-    val stage = s"minisegs-batch-$batchId"
-    if (IndexStore.isCommitted(out, stage)) return // replay after recovery
-    val filtered = conf.langFilter
-      .map(l => batch.filter(col("lang") === l)).getOrElse(batch)
-    val base = readHwm(out)
-    val (ids, n, release) =
-      IndexStore.assignDocIds(filtered, conf.shufflePartitions, base)
-    try {
-      // the two writes consume the SAME cached assignment and touch
-      // disjoint outputs — concurrent jobs (guide §2.6); the hwm/manifest
-      // commit point below still happens only after both finish
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fDocmap = Future {
-        ids.write.mode(SaveMode.Overwrite)
-          .parquet(s"$out/docmap/batch=$batchId")
-      }
+                   conf: BuildConf): Unit =
+    // a committed batch is a replay after recovery: skipped
+    IndexStore.stage(out, s"minisegs-batch-$batchId") {
+      val filtered = conf.langFilter
+        .map(l => batch.filter(col("lang") === l)).getOrElse(batch)
+      val base = readHwm(out)
+      val (ids, n, release) =
+        IndexStore.assignDocIds(filtered, conf.shufflePartitions, base)
       val (obs, aggs) = IndexStore.miniObs(s"batch-$batchId")
-      IndexBuilder.miniSegments(ids, conf.bucketDocs).toDF()
-        .observe(obs, aggs.head, aggs.tail: _*)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$out/minisegs/slice=b$batchId")
-      Await.result(fDocmap, Duration.Inf)
+      // the two writes consume the SAME cached assignment and touch
+      // disjoint outputs; the cache goes once both have ended
+      try IndexStore.concurrently(
+        () => ids.write.mode(SaveMode.Overwrite)
+          .parquet(s"$out/docmap/batch=$batchId"),
+        () => IndexBuilder.miniSegments(ids, conf.bucketDocs).toDF()
+          .observe(obs, aggs.head, aggs.tail: _*)
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$out/minisegs/slice=b$batchId"))
+      finally release()
       // commit order matters: hwm first, then the manifest that marks the
       // batch done — a crash in between replays the batch onto the same
       // (already-written, overwritten) outputs with a fresh hwm window
-      writeHwm(out, base + n)
-      IndexStore.commit(out, stage,
-        IndexStore.miniCounters(obs.get) + ("docIdBase" -> base))
-    } finally release()
-  }
+      IndexStore.writeFile(hwmPath(out), (base + n).toString)
+      IndexStore.miniCounters(obs.get) + ("docIdBase" -> base)
+    }
 
   /** Total docs ingested so far (the docId high-water mark). */
   def ingestedDocs(out: String): Long = readHwm(out)
 
   /** Start the ingestion query over a streaming pages DataFrame. */
   def ingest(pages: DataFrame, out: String,
-             conf: BuildConf = BuildConf()): StreamingQuery = {
-    Files.createDirectories(Paths.get(out))
+             conf: BuildConf = BuildConf()): StreamingQuery =
     pages.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$out/_checkpoint")
@@ -96,18 +80,15 @@ object StreamingIndexer {
         processBatch(batch, batchId, out, conf)
       }
       .start()
-  }
 
   /** Build/refresh the derived tables over all ingested batches. */
   def seal(spark: SparkSession, out: String,
            conf: BuildConf = BuildConf()): Unit = {
-    Seq("termstats", "segments", "docstats", "collstats").foreach { st =>
-      val p = Paths.get(s"$out/_manifests/$st.json")
-      if (Files.exists(p)) Files.delete(p)
-    }
+    Seq("termstats", "segments", "docstats", "collstats", "docmap")
+      .foreach(IndexStore.uncommit(out, _))
     // the docmap is complete once its batches are: record its size like
     // the batch build does, so a sealed stream store can be merged
-    IndexStore.commit(out, "docmap", Map("docs" -> ingestedDocs(out)))
+    IndexStore.stage(out, "docmap")(Map("docs" -> ingestedDocs(out)))
     IndexStore.derivedStages(spark, out, conf)
   }
 }

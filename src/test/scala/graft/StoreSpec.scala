@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.SyntheticCorpus
 import graft.index._
 import graft.query._
+import graft.streaming.StreamingIndexer
 import java.nio.file.{Files, Paths}
 
 /** Persistent store: build → read-back equivalence with the in-memory
@@ -100,6 +101,64 @@ class StoreSpec extends AnyFunSuite {
     assert(wandTop(byUri) == wandTop(pIndex))
   }
 
+  test("stores written to file:// URIs match their plain-path twins") {
+    import spark.implicits._
+    val pages = SyntheticCorpus.pages(spark, 200, 4).toDF()
+    val median = pages.select("url").orderBy("url").collect()
+      .map(_.getString(0)).apply(100)
+    val conf = BuildConf(numSlices = 2, numBuckets = 4,
+      termBuckets = 16, shufflePartitions = 4)
+    def batch(b: Long) = (b * 40L until (b + 1) * 40L).map(SyntheticCorpus.page).toDF()
+    // every store step, into `root` given as a plain path or as a URI
+    def lifecycle(root: String): Unit = {
+      IndexStore.build(pages.filter(col("url") < median), s"$root/a", conf)
+      IndexStore.build(pages.filter(col("url") >= median), s"$root/b",
+        conf.copy(numSlices = 1))
+      IndexStore.mergeStores(spark, s"$root/a", s"$root/b", s"$root/ab", conf)
+      IndexStore.deleteDocs(spark, s"$root/ab", s"$root/del",
+        pages.filter(col("url") < median).limit(20).select("url"), conf)
+      Seq(0L, 1L).foreach(b =>
+        StreamingIndexer.processBatch(batch(b), b, s"$root/stream", conf))
+      StreamingIndexer.seal(spark, s"$root/stream", conf)
+      StreamingIndexer.processBatch(batch(2), 2, s"$root/stream", conf)
+      StreamingIndexer.seal(spark, s"$root/stream", conf)
+    }
+    val base = Files.createTempDirectory("graft-uri").toString
+    lifecycle(s"$base/plain")
+    lifecycle(s"file://$base/uri")
+    val parser = new QueryParser(defaultOp = QOp.SUM)
+    Seq("a", "b", "ab", "del", "stream").foreach { store =>
+      def top(dir: String) = new Engine(IndexStore.open(spark, dir, 16), BM25())
+        .search("obama family tree", 10, parser).collect().map(_.toString).toList
+      assert(top(s"file://$base/uri/$store") == top(s"$base/plain/$store"), store)
+      // every file of the store sits under its URI, none under the cwd
+      assert(Files.readString(Paths.get(base, "uri", store, "collstats.json")) ==
+        Files.readString(Paths.get(base, "plain", store, "collstats.json")), store)
+    }
+    // the re-seal recorded the third batch
+    assert(IndexStore.manifestCounter(s"file://$base/uri/stream", "docmap", "docs") ==
+      spark.read.parquet(s"$base/uri/stream/docmap").count())
+  }
+
+  test("a staged build never changes the caller's session conf") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.get(key)
+    val dir = Files.createTempDirectory("graft-conf").toString
+    // splitBytes > 0 takes the staged path, which reads the docmap with
+    // this split size
+    val build = Future(IndexStore.build(SyntheticCorpus.pages(spark, 200, 4).toDF(),
+      dir, BuildConf(numSlices = 2, numBuckets = 4, termBuckets = 16,
+        shufflePartitions = 4, splitBytes = 1L << 20)))
+    val seen = scala.collection.mutable.Set(before)
+    while (!build.isCompleted) seen += spark.conf.get(key)
+    Await.result(build, Duration.Inf)
+    assert(seen == Set(before))
+    assert(IndexStore.isCommitted(dir, "minisegs-slice-1"))
+  }
+
   test("heavy terms are salted into multiple segments") {
     val segs = pIndex.segmentsOf("w0", "default").collect()
     assert(segs.length > 1, "w0 should be df-heavy and range-bucketed")
@@ -133,6 +192,9 @@ class StoreSpec extends AnyFunSuite {
     val sliceDocs = (0 until 4).map(i =>
       IndexStore.manifestCounter(outDir, s"minisegs-slice-$i", "docs")).sum
     assert(sliceDocs == IndexStore.manifestCounter(outDir, "docmap", "docs"))
+    // every stage records its wall time, which the build report lists
+    assert(IndexStore.stageWalls(outDir).map(_._1).toSet == stages.toSet)
+    assert(IndexStore.stageWalls(outDir).last._1 == "collstats")
   }
 
   test("resume skips committed slices and reproduces identical output") {
