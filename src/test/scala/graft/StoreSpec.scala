@@ -140,6 +140,26 @@ class StoreSpec extends AnyFunSuite {
       spark.read.parquet(s"$base/uri/stream/docmap").count())
   }
 
+  test("store files on a FileSystem whose rename refuses an existing target") {
+    // every store FileSystem but the local one takes the Hadoop path of
+    // writeFile/readFile; HdfsLikeFs is a local disk that renames like HDFS
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.hdfslike.impl", classOf[HdfsLikeFs].getName)
+    hc.set("fs.AbstractFileSystem.hdfslike.impl", classOf[HdfsLikeAfs].getName)
+    val dir = Files.createTempDirectory("graft-hdfslike").toString
+    val hwm = s"hdfslike://$dir/_manifests/docid-hwm"
+    assert(IndexStore.readFile(hwm).isEmpty)
+    IndexStore.writeFile(hwm, "40")
+    val refusedBefore = HdfsLikeFs.refused.get
+    IndexStore.writeFile(hwm, "80")
+    assert(HdfsLikeFs.refused.get > refusedBefore, "the re-write met a refusing rename")
+    assert(IndexStore.readFile(hwm).contains("80"))
+    IndexStore.stage(s"hdfslike://$dir", "s")(Map("n" -> 1L))
+    assert(IndexStore.manifestCounter(s"hdfslike://$dir", "s", "n") == 1L)
+    assert(Files.list(Paths.get(dir, "_manifests")).toArray.map(_.toString).sorted.toSeq ==
+      Seq(s"$dir/_manifests/docid-hwm", s"$dir/_manifests/s.json"))
+  }
+
   test("a staged build never changes the caller's session conf") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -386,3 +406,23 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 }
+
+/** A local-disk FileSystem under the `hdfslike` scheme whose rename, like
+  * HDFS's, refuses an existing target.
+  */
+class HdfsLikeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  override def getUri: java.net.URI = java.net.URI.create("hdfslike:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    if (exists(dst)) { HdfsLikeFs.refused.incrementAndGet(); false }
+    else super.rename(src, dst)
+}
+
+object HdfsLikeFs {
+  val refused = new java.util.concurrent.atomic.AtomicInteger
+}
+
+/** [[HdfsLikeFs]] for FileContext, whose rename can overwrite. */
+class HdfsLikeAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new HdfsLikeFs, conf,
+      "hdfslike", false)
