@@ -34,7 +34,7 @@ object Bench {
     s"$base/target/scala-2.13/classes:$base/target/scala-2.13/yairsspark_2.13-0.1.0.jar"
   }
 
-  private def session(executors: Int): SparkSession = {
+  private[graft] def session(executors: Int): SparkSession = {
     val cpus = executors * CoresPerExecutor
     val s = SparkSession.builder()
       .master(s"local-cluster[$executors,$CoresPerExecutor,6144]")

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Optimization-round companion bench (guide §1): times the SAME gate
-  * queries as [[Bench]] in the SAME session shape (local-cluster executor
-  * JVMs, identical confs), but adds the diagnostics the frozen bench
+  * queries as [[Bench]] in the SAME session (`Bench.session`: local-cluster
+  * executor JVMs, identical confs), but adds the diagnostics the frozen bench
   * cannot: per-gate Spark job/stage/task counts, shuffle bytes and
   * driver-side codegen compiles and compile ms (the fixed-overhead profile
   * that dominates at sf0.1), optional repeats, an
@@ -21,45 +20,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *  - GRAFT_PLANS_DIR: if set, write <gate>.txt formatted plans there.
   */
 object BenchExtra {
-  private def scratch(name: String): String = {
-    val base = if (java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get("/dev/shm"))) "/dev/shm/graft-benchx"
-    else System.getProperty("java.io.tmpdir") + "/graft-benchx"
-    val p = java.nio.file.Paths.get(base, name)
-    java.nio.file.Files.createDirectories(p)
-    p.toString
-  }
-
-  private def appClasspath: String = {
-    val base = new java.io.File(".").getCanonicalPath
-    s"$base/target/scala-2.13/classes:$base/target/scala-2.13/yairsspark_2.13-0.1.0.jar"
-  }
-
-  // Mirrors Bench.session(8): the gate wall is only comparable if the
-  // cluster shape (8 forked executor JVMs, 4 cores each) and confs match.
-  private def session(executors: Int): SparkSession = {
-    val cpus = executors * 4
-    val s = SparkSession.builder()
-      .master(s"local-cluster[$executors,4,6144]")
-      .appName(s"graft-benchx-$executors")
-      .config("spark.executor.memory", "5g")
-      .config("spark.executor.extraJavaOptions", "-XX:ActiveProcessorCount=4 -Xms5g -XX:+AlwaysPreTouch")
-      .config("spark.network.timeout", "300s")
-      .config("spark.executor.heartbeatInterval", "30s")
-      .config("spark.task.maxFailures", "8")
-      .config("spark.executor.extraClassPath", appClasspath)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", scratch("shuffle"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -69,7 +29,7 @@ object BenchExtra {
     val plansDir = sys.env.get("GRAFT_PLANS_DIR")
     val wanted = sys.env.get("GRAFT_GATES").map(_.split(',').map(_.trim).toSet)
 
-    val spark = session(exHi)
+    val spark = Bench.session(exHi)
 
     // per-gate job/stage/task/shuffle counters
     val jobs = new java.util.concurrent.atomic.AtomicLong

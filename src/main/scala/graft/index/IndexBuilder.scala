@@ -38,23 +38,6 @@ object IndexBuilder {
     }.toDF()
   }
 
-  /** Like buildPostings but with positions pre-encoded as a varint binary
-    * `rec` column ((count, deltas) — Codec.encodePositions): the segment
-    * sort/encode stage then only concatenates bytes instead of
-    * re-materializing and re-encoding 10⁸⁺ position arrays. Columns:
-    * term, field, docId, tf, dl, rec.
-    */
-  def buildPostingsEncoded(docs: Dataset[FieldDoc]): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { fd =>
-      val tokens = Tokenizer.tokenize(fd.text)
-      val dl = tokens.length
-      Tokenizer.termVector(tokens).iterator.map { case (t, (tf, pos)) =>
-        (t, fd.field, fd.docId, tf, dl, Codec.encodePositions(pos))
-      }
-    }.toDF("term", "field", "docId", "tf", "dl", "rec")
-  }
-
   /** The reference's four-field document layout (yairs/io/FileUtils
     * .scala:38-49): default = full extracted text, title = first line,
     * body = rest, url = the page url.

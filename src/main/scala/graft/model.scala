@@ -24,16 +24,6 @@ object model {
   case class PostingRow(term: String, field: String, docId: Long, tf: Int,
                         dl: Int, positions: Array[Int])
 
-  /** Per-(term, field) statistics; df = #docs containing term, cf = total
-    * occurrences. These are the header scalars of a reference `.inv` file
-    * (reference: InvertedList.scala:127-133).
-    */
-  case class TermStat(term: String, field: String, df: Long, cf: Long)
-
-  /** Per-document statistics (lengths are per field, in tokens). */
-  case class DocStat(docId: Long, url: String, lenDefault: Int,
-                     lenTitle: Int, lenBody: Int, lenUrl: Int)
-
   /** Collection-level statistics the scorers consume. The reference reads
     * these from config (reference: conf/bm25.properties:38-41); we compute
     * them at index-build time over the default field.

@@ -4,22 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video payloads travel as opaque
-  * `binary` columns with typed metadata; decode / feature-extract run as
-  * batched partition-local transforms (the Scala analogue of a Pandas UDF
-  * over mapInPandas: one JVM-side pass per partition, vectorizable batch
-  * shape, no per-row driver involvement).
+  * `binary` columns with typed metadata; feature extraction and frame
+  * sampling run as partition-local transforms over the typed rows, with no
+  * per-row driver involvement.
   *
-  * Decode: FOUR real formats are implemented, all pure JVM with no
-  * external libs — uncompressed 24/32-bit BMP (`decodeBmp`), 8-bit
-  * non-interlaced PNG (`decodePng`, zlib via `java.util.zip.Inflater`,
-  * full scanline unfiltering), baseline JFIF/JPEG (`decodeJpeg`:
-  * marker walk, canonical Huffman entropy decode, dequantization,
-  * 8×8 IDCT of the luma plane), and RIFF/WAVE integer PCM audio
-  * (`decodeWav`) — and every other payload falls back to `decodeStub`,
-  * a deterministic fake (no Opus/video codecs ship in this
-  * container). Schema, binary transport, partition batching and feature
-  * shape are identical on all paths, so further real decoders drop into
-  * the same seam without touching the plumbing.
+  * Decode is a deterministic stub (`decodeStub`): width, height and
+  * channels come from the payload's byte length and the features from a
+  * strided byte sample. The retrieval engine never reads media, and the
+  * `q_op_mm_meta` gate feeds document text as the payload and checks the
+  * stub formula against its DuckDB oracle, so the stub is the whole
+  * contract. A real decoder would replace `decodeStub` behind the same
+  * schema without touching the plumbing.
   */
 object Multimodal {
 
@@ -42,579 +37,17 @@ object Multimodal {
     MediaMeta(id, n, width, height, channels, feats)
   }
 
-  /** Real decode of one format: uncompressed 24/32-bit BMP
-    * (BITMAPFILEHEADER + 40-byte BITMAPINFOHEADER, BI_RGB). Returns None
-    * for anything else. Validation is strict — magic, header size, plane
-    * count, compression, and dimensions consistent with the actual byte
-    * count — so arbitrary text/binary payloads cannot false-positive into
-    * the real-decode path.
-    *
-    * Features: mean pixel intensity of ONE sampled row per horizontal
-    * band (`featDim` bands, top to bottom; BMP rows are stored bottom-up
-    * for positive heights), in [0, 1] — a real, deterministic image
-    * statistic at O(featDim · width) cost regardless of image height.
-    */
-  def decodeBmp(id: Long, bytes: Array[Byte], featDim: Int): Option[MediaMeta] = {
-    def u16(o: Int): Int = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    def i32(o: Int): Int = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-      ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
-    if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    val pixOff = i32(10)
-    val hdrSize = i32(14)
-    val width = i32(18)
-    val height = i32(22)
-    val planes = u16(26)
-    val bpp = u16(28)
-    val compression = i32(30)
-    if (hdrSize != 40 || planes != 1 || compression != 0) return None
-    // dimension sanity caps BEFORE any arithmetic: adversarial headers
-    // otherwise overflow 32-bit products (width*channels negative,
-    // math.abs(Int.MinValue) still negative) and slip past the byte-count
-    // check into out-of-bounds reads — a corrupt payload must fall back
-    // to the stub, never fail the job
-    val MaxDim = 1 << 20
-    if (width <= 0 || width > MaxDim || height == 0 ||
-        height == Int.MinValue || math.abs(height) > MaxDim ||
-        (bpp != 24 && bpp != 32)) return None
-    val rows = math.abs(height)
-    val channels = bpp / 8
-    val rowBytes = ((width * channels + 3) / 4) * 4 // rows pad to 4 bytes
-    if (pixOff < 54 ||
-        pixOff.toLong + rows.toLong * rowBytes > bytes.length) return None
-    val feats = new Array[Float](featDim)
-    var f = 0
-    while (f < featDim) {
-      val r = (f.toLong * rows / featDim).toInt // image row, top to bottom
-      val storageRow = if (height > 0) rows - 1 - r else r
-      val rowStart = pixOff + storageRow * rowBytes
-      var sum = 0L
-      var x = 0
-      while (x < width * channels) { sum += (bytes(rowStart + x) & 0xFF); x += 1 }
-      feats(f) = (sum.toDouble / (width * channels) / 255.0).toFloat
-      f += 1
-    }
-    Some(MediaMeta(id, bytes.length, width, rows, channels, feats))
-  }
-
-  /** Real decode of PNG (8-bit greyscale/RGB/RGBA, non-interlaced) —
-    * pure JVM: zlib inflate via `java.util.zip.Inflater`, full scanline
-    * unfiltering (None/Sub/Up/Average/Paeth), CRC-verified chunks.
-    * Returns None for anything else (palette, 16-bit, interlaced, bad
-    * CRC, truncated, or dimensions whose pixel buffer would exceed the
-    * decode cap — a zip-bomb IDAT cannot balloon memory).
-    *
-    * Features: as decodeBmp — mean intensity of one sampled row per
-    * horizontal band, top to bottom, in [0, 1].
-    */
-  def decodePng(id: Long, bytes: Array[Byte], featDim: Int): Option[MediaMeta] = {
-    def i32(o: Int): Int = ((bytes(o) & 0xFF) << 24) | ((bytes(o + 1) & 0xFF) << 16) |
-      ((bytes(o + 2) & 0xFF) << 8) | (bytes(o + 3) & 0xFF) // PNG is big-endian
-    val Sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
-    if (bytes.length < 45 || !bytes.take(8).sameElements(Sig)) return None
-    var off = 8
-    var width = 0
-    var height = 0
-    var channels = 0
-    var sawIhdr = false
-    var sawIend = false
-    val idat = new java.io.ByteArrayOutputStream()
-    while (off + 12 <= bytes.length && !sawIend) {
-      val len = i32(off)
-      val ctype = new String(bytes, off + 4, 4, "US-ASCII")
-      if (len < 0 || off + 12L + len > bytes.length) return None
-      val crc = new java.util.zip.CRC32()
-      crc.update(bytes, off + 4, 4 + len)
-      if (crc.getValue.toInt != i32(off + 8 + len)) return None
-      ctype match {
-        case "IHDR" =>
-          if (len != 13) return None
-          width = i32(off + 8)
-          height = i32(off + 12)
-          val bitDepth = bytes(off + 16) & 0xFF
-          val colorType = bytes(off + 17) & 0xFF
-          val (compression, filterM, interlace) =
-            (bytes(off + 18) & 0xFF, bytes(off + 19) & 0xFF, bytes(off + 20) & 0xFF)
-          channels = colorType match {
-            case 0 => 1 case 2 => 3 case 6 => 4 case _ => return None
-          }
-          if (bitDepth != 8 || compression != 0 || filterM != 0 ||
-              interlace != 0 || width <= 0 || height <= 0) return None
-          // decode cap: raw buffer ≤ 64 MB regardless of claimed dims
-          if ((1L + width.toLong * channels) * height > (64L << 20)) return None
-          sawIhdr = true
-        case "IDAT" => idat.write(bytes, off + 8, len)
-        case "IEND" => sawIend = true
-        case _ => // ancillary chunks skipped
-      }
-      off += 12 + len
-    }
-    if (!sawIhdr || !sawIend || idat.size == 0) return None
-    val rowBytes = width * channels
-    val raw = new Array[Byte]((1 + rowBytes) * height)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    try {
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        // n == 0 with input still pending covers truncated streams AND
-        // FDICT (preset-dictionary) zlib streams, where inflate() stalls
-        // with needsInput()==false — looping on either would spin the
-        // executor task forever. Both are malformed for PNG: bail.
-        if (n == 0) return None
-        got += n
-      }
-    } finally inf.end() // release the native zlib buffer on every path
-    if (got != raw.length) return None
-    // unfilter in place into pix (scanline filters are defined on the
-    // bytes of the PREVIOUS unfiltered row and the pixel to the left)
-    val pix = new Array[Byte](rowBytes * height)
-    val bpp = channels
-    var y = 0
-    while (y < height) {
-      val ft = raw(y * (1 + rowBytes)) & 0xFF
-      val src = y * (1 + rowBytes) + 1
-      val dst = y * rowBytes
-      var x = 0
-      while (x < rowBytes) {
-        val rv = raw(src + x) & 0xFF
-        val a = if (x >= bpp) pix(dst + x - bpp) & 0xFF else 0
-        val b = if (y > 0) pix(dst - rowBytes + x) & 0xFF else 0
-        val c = if (x >= bpp && y > 0) pix(dst - rowBytes + x - bpp) & 0xFF else 0
-        val out = ft match {
-          case 0 => rv
-          case 1 => rv + a
-          case 2 => rv + b
-          case 3 => rv + (a + b) / 2
-          case 4 =>
-            val p = a + b - c
-            val (pa, pb, pc) = (math.abs(p - a), math.abs(p - b), math.abs(p - c))
-            rv + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-          case _ => return None
-        }
-        pix(dst + x) = out.toByte
-        x += 1
-      }
-      y += 1
-    }
-    val feats = new Array[Float](featDim)
-    var f = 0
-    while (f < featDim) {
-      val r = (f.toLong * height / featDim).toInt
-      var sum = 0L
-      var x = 0
-      while (x < rowBytes) { sum += (pix(r * rowBytes + x) & 0xFF); x += 1 }
-      feats(f) = (sum.toDouble / rowBytes / 255.0).toFloat
-      f += 1
-    }
-    Some(MediaMeta(id, bytes.length, width, height, channels, feats))
-  }
-
-  /** Real decode of baseline JFIF/JPEG — pure JVM: marker segment walk
-    * (SOI/APPn/DQT/SOF0/DHT/DRI/SOS/EOI), canonical Huffman entropy
-    * decode with byte-stuffing and restart-marker handling, 8-bit
-    * dequantization, inverse zigzag, and a separable float 8×8 IDCT of
-    * the LUMA component only (chroma blocks are fully entropy-decoded to
-    * keep the bitstream aligned, then discarded — the feature is an
-    * intensity statistic and Y is full-resolution under 4:2:0/4:2:2).
-    *
-    * Strictly baseline: SOF0, 8-bit precision, 1 or 3 components, Y at
-    * full sampling resolution, all Huffman/quant tables present, every
-    * MCU decodes, EOI terminates the scan. Anything else — progressive
-    * (SOF2), arithmetic coding, 12-bit, truncated entropy data, a
-    * missing table, dimensions whose luma plane would exceed the 64 MB
-    * decode cap — returns None and falls back to the stub, never fails
-    * the partition.
-    *
-    * Features: as decodeBmp/decodePng — mean luma of one sampled row per
-    * horizontal band, top to bottom, in [0, 1].
-    */
-  def decodeJpeg(id: Long, bytes: Array[Byte], featDim: Int): Option[MediaMeta] = {
-    final class Bail extends RuntimeException
-    def bail(): Nothing = throw new Bail
-    def u8(o: Int): Int = { if (o >= bytes.length) bail(); bytes(o) & 0xFF }
-    def u16be(o: Int): Int = (u8(o) << 8) | u8(o + 1)
-    if (bytes.length < 4 || u8(0) != 0xFF || u8(1) != 0xD8) return None
-    try {
-      // ---- segment walk up to SOS ----------------------------------
-      val qt = Array.ofDim[Int](4, 64)          // dequant tables (natural order index via zigzag)
-      val qtSeen = new Array[Boolean](4)
-      // Huffman tables: (class 0=DC,1=AC)(id 0..3) → (mincode, maxcode, valptr, vals)
-      val hMin = Array.ofDim[Int](2, 4, 17)
-      val hMax = Array.ofDim[Int](2, 4, 17)
-      val hPtr = Array.ofDim[Int](2, 4, 17)
-      val hVal = Array.ofDim[Array[Int]](2, 4)
-      var width = 0; var height = 0; var nComp = 0
-      val compH = new Array[Int](3); val compV = new Array[Int](3)
-      val compTq = new Array[Int](3); val compId = new Array[Int](3)
-      var dri = 0
-      var pos = 2
-      var sawSof = false
-      var sosAt = -1
-      val scanDc = new Array[Int](3); val scanAc = new Array[Int](3)
-      var nScan = 0; val scanComp = new Array[Int](3) // index into SOF comps
-      while (sosAt < 0) {
-        if (u8(pos) != 0xFF) bail()
-        var m = u8(pos + 1)
-        while (m == 0xFF) { pos += 1; m = u8(pos + 1) } // fill bytes
-        pos += 2
-        if (m == 0xD9) bail()                    // EOI before SOS
-        if (m == 0x01 || (m >= 0xD0 && m <= 0xD7)) {
-          // standalone markers, no length — nothing to do
-        } else {
-          val len = u16be(pos)
-          if (len < 2 || pos + len > bytes.length) bail()
-          val end = pos + len
-          m match {
-            case 0xDB => // DQT: one or more tables
-              var o = pos + 2
-              while (o < end) {
-                val pq = u8(o) >> 4; val tq = u8(o) & 0x0F
-                if (pq != 0 || tq > 3 || o + 65 > end) bail() // 8-bit only
-                var k = 0
-                while (k < 64) { qt(tq)(k) = u8(o + 1 + k); k += 1 }
-                qtSeen(tq) = true
-                o += 65
-              }
-            case 0xC0 => // SOF0 baseline
-              if (sawSof) bail()
-              if (u8(pos + 2) != 8) bail()       // precision
-              height = u16be(pos + 3); width = u16be(pos + 5)
-              nComp = u8(pos + 7)
-              if ((nComp != 1 && nComp != 3) || width <= 0 || height <= 0 ||
-                  pos + 8 + 3 * nComp > end) bail()
-              var c = 0
-              while (c < nComp) {
-                compId(c) = u8(pos + 8 + 3 * c)
-                val hv = u8(pos + 9 + 3 * c)
-                compH(c) = hv >> 4; compV(c) = hv & 0x0F
-                compTq(c) = u8(pos + 10 + 3 * c)
-                if (compH(c) < 1 || compH(c) > 4 || compV(c) < 1 ||
-                    compV(c) > 4 || compTq(c) > 3) bail()
-                c += 1
-              }
-              sawSof = true
-            case 0xC1 | 0xC2 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
-                 0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-              bail()                             // non-baseline SOF
-            case 0xC4 => // DHT: one or more tables
-              var o = pos + 2
-              while (o < end) {
-                val tc = u8(o) >> 4; val th = u8(o) & 0x0F
-                if (tc > 1 || th > 3 || o + 17 > end) bail()
-                val counts = Array.tabulate(16)(i => u8(o + 1 + i))
-                val total = counts.sum
-                if (total > 256 || o + 17 + total > end) bail()
-                val vals = Array.tabulate(total)(i => u8(o + 17 + i))
-                var code = 0; var k = 0; var l = 1
-                while (l <= 16) {
-                  hPtr(tc)(th)(l) = k; hMin(tc)(th)(l) = code
-                  code += counts(l - 1); k += counts(l - 1)
-                  hMax(tc)(th)(l) = if (counts(l - 1) > 0) code - 1 else -1
-                  if (code > (1 << l)) bail()    // over-subscribed table
-                  code <<= 1
-                  l += 1
-                }
-                hVal(tc)(th) = vals
-                o += 17 + total
-              }
-            case 0xDD => // DRI
-              if (len != 4) bail()
-              dri = u16be(pos + 2)
-            case 0xDA => // SOS
-              if (!sawSof) bail()
-              nScan = u8(pos + 2)
-              if (nScan != nComp || pos + 3 + 2 * nScan + 3 > end) bail()
-              var s = 0
-              while (s < nScan) {
-                val cid = u8(pos + 3 + 2 * s)
-                val ci = compId.indexWhere(_ == cid)
-                if (ci < 0 || ci >= nComp) bail()
-                scanComp(s) = ci
-                scanDc(s) = u8(pos + 4 + 2 * s) >> 4
-                scanAc(s) = u8(pos + 4 + 2 * s) & 0x0F
-                if (scanDc(s) > 3 || scanAc(s) > 3 ||
-                    hVal(0)(scanDc(s)) == null || hVal(1)(scanAc(s)) == null ||
-                    !qtSeen(compTq(ci))) bail()
-                s += 1
-              }
-              val o = pos + 3 + 2 * nScan
-              if (u8(o) != 0 || u8(o + 1) != 63 || u8(o + 2) != 0) bail() // baseline spectral range
-              sosAt = end
-            case _ => // APPn / COM / other: skip
-          }
-          pos = end
-        }
-      }
-      // ---- geometry ------------------------------------------------
-      var hmax = 1; var vmax = 1
-      var c = 0
-      while (c < nComp) {
-        hmax = math.max(hmax, compH(c)); vmax = math.max(vmax, compV(c))
-        c += 1
-      }
-      // luma must be full-resolution (true of every JFIF in the wild);
-      // otherwise the feature row-sampling below would need resampling
-      if (compH(0) != hmax || compV(0) != vmax) bail()
-      // T.81 A.2: a SINGLE-component scan is NON-interleaved — one 8×8
-      // data unit per MCU tiling ceil(w/8) × ceil(h/8), with the
-      // declared sampling factors NOT expanding the MCU (a grayscale
-      // SOF0 may legally declare H=V=2; treating that as a 16×16
-      // 4-block MCU would misalign the entropy stream and the DRI
-      // restart positions)
-      val oneComp = nScan == 1
-      val mcuW = if (oneComp) 8 else 8 * hmax
-      val mcuH = if (oneComp) 8 else 8 * vmax
-      val mcusX = (width + mcuW - 1) / mcuW
-      val mcusY = (height + mcuH - 1) / mcuH
-      val yStride = mcusX * mcuW
-      val yRows = mcusY * mcuH
-      if (yStride.toLong * yRows > (64L << 20)) bail() // decode cap
-      val yPlane = new Array[Byte](yStride * yRows)
-      // ---- entropy decode ------------------------------------------
-      var ep = sosAt                              // entropy-coded segment cursor
-      var bitBuf = 0; var bitCnt = 0
-      def nextBit(): Int = {
-        if (bitCnt == 0) {
-          val b = u8(ep); ep += 1
-          if (b == 0xFF) {
-            val b2 = u8(ep)
-            if (b2 == 0x00) ep += 1              // stuffed byte
-            else bail()                          // marker mid-entropy-data
-          }
-          bitBuf = b; bitCnt = 8
-        }
-        bitCnt -= 1
-        (bitBuf >> bitCnt) & 1
-      }
-      def huffDecode(tc: Int, th: Int): Int = {
-        var code = 0; var l = 1
-        while (l <= 16) {
-          code = (code << 1) | nextBit()
-          if (hMax(tc)(th)(l) >= 0 && code <= hMax(tc)(th)(l))
-            return hVal(tc)(th)(hPtr(tc)(th)(l) + code - hMin(tc)(th)(l))
-          l += 1
-        }
-        bail()
-      }
-      def receiveExtend(t: Int): Int = {
-        if (t == 0) return 0
-        if (t > 15) bail()
-        var v = 0; var i = 0
-        while (i < t) { v = (v << 1) | nextBit(); i += 1 }
-        if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-      }
-      // IDCT basis: cos((2x+1)·u·π/16) · C(u)/2, precomputed 8×8
-      val basis = Array.tabulate(8, 8) { (x, u) =>
-        val cu = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
-        0.5 * cu * math.cos((2 * x + 1) * u * math.Pi / 16.0)
-      }
-      val zigzag = Array(
-        0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-        12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-        35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-        58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-      val coef = new Array[Int](64)               // natural-order dequantized block
-      val tmp = new Array[Double](64)
-      val dcPred = new Array[Int](3)
-      def decodeBlock(s: Int, store: Boolean, x0: Int, y0: Int): Unit = {
-        val ci = scanComp(s)
-        val q = qt(compTq(ci))
-        java.util.Arrays.fill(coef, 0)
-        val t = huffDecode(0, scanDc(s))
-        dcPred(ci) += receiveExtend(t)
-        coef(0) = dcPred(ci) * q(0)
-        var k = 1
-        while (k < 64) {
-          val rs = huffDecode(1, scanAc(s))
-          val r = rs >> 4; val sz = rs & 0x0F
-          if (sz == 0) {
-            if (r == 15) k += 16                  // ZRL
-            else k = 64                           // EOB
-          } else {
-            k += r
-            if (k > 63) bail()
-            coef(zigzag(k)) = receiveExtend(sz) * q(k)
-            k += 1
-          }
-        }
-        if (store) {
-          // separable IDCT: rows then columns
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              var acc = 0.0
-              var u = 0
-              while (u < 8) { acc += basis(x)(u) * coef(y * 8 + u); u += 1 }
-              tmp(y * 8 + x) = acc
-              x += 1
-            }
-            y += 1
-          }
-          var x = 0
-          while (x < 8) {
-            var yy = 0
-            while (yy < 8) {
-              var acc = 0.0
-              var v = 0
-              while (v < 8) { acc += basis(yy)(v) * tmp(v * 8 + x); v += 1 }
-              val px = math.max(0, math.min(255, math.round(acc + 128).toInt))
-              val gy = y0 + yy; val gx = x0 + x
-              yPlane(gy * yStride + gx) = px.toByte
-              yy += 1
-            }
-            x += 1
-          }
-        }
-      }
-      var mcu = 0
-      val nMcus = mcusX * mcusY
-      var rstIdx = 0
-      while (mcu < nMcus) {
-        if (dri > 0 && mcu > 0 && mcu % dri == 0) {
-          bitCnt = 0                              // restart: byte-align
-          if (u8(ep) != 0xFF || u8(ep + 1) != (0xD0 + rstIdx)) bail()
-          ep += 2
-          rstIdx = (rstIdx + 1) % 8
-          java.util.Arrays.fill(dcPred, 0)
-        }
-        val mx = mcu % mcusX; val my = mcu / mcusX
-        var s = 0
-        while (s < nScan) {
-          val ci = scanComp(s)
-          // non-interleaved single-component scan: exactly one block per
-          // MCU (see the oneComp geometry note above)
-          val nv = if (oneComp) 1 else compV(ci)
-          val nh = if (oneComp) 1 else compH(ci)
-          var by = 0
-          while (by < nv) {
-            var bx = 0
-            while (bx < nh) {
-              decodeBlock(s, store = ci == 0,
-                mx * mcuW + bx * 8, my * mcuH + by * 8)
-              bx += 1
-            }
-            by += 1
-          }
-          s += 1
-        }
-        mcu += 1
-      }
-      // scan must terminate in EOI (optional fill bytes allowed)
-      bitCnt = 0
-      if (u8(ep) != 0xFF) bail()
-      var em = u8(ep + 1)
-      while (em == 0xFF) { ep += 1; em = u8(ep + 1) }
-      if (em != 0xD9) bail()
-      // ---- features ------------------------------------------------
-      val feats = new Array[Float](featDim)
-      var f = 0
-      while (f < featDim) {
-        val r = (f.toLong * height / featDim).toInt
-        var sum = 0L
-        var x = 0
-        while (x < width) { sum += (yPlane(r * yStride + x) & 0xFF); x += 1 }
-        feats(f) = (sum.toDouble / width / 255.0).toFloat
-        f += 1
-      }
-      Some(MediaMeta(id, bytes.length, width, height, nComp, feats))
-    } catch {
-      case _: Bail | _: ArrayIndexOutOfBoundsException => None
-    }
-  }
-
-  /** Real decode of a second modality: RIFF/WAVE PCM audio (8- or 16-bit
-    * integer PCM, the `fmt ` + `data` chunk layout). Returns None for
-    * anything else — validation is strict (magic, chunk walk bounded by
-    * the byte count, PCM format code, sane channel/rate/width, data size
-    * consistent with block alignment) so arbitrary payloads cannot
-    * false-positive.
-    *
-    * MediaMeta mapping for audio: width = sample rate (Hz), height =
-    * frames, channels = channels. Features: mean absolute amplitude (in
-    * [0, 1], full scale = 1) of `featDim` equal temporal bands, each
-    * band sampled at ≤ 1024 evenly-spaced frames — a real loudness
-    * envelope at bounded cost regardless of clip length.
-    */
-  def decodeWav(id: Long, bytes: Array[Byte], featDim: Int): Option[MediaMeta] = {
-    def u16(o: Int): Int = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    def i32(o: Int): Int = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-      ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
-    def tag(o: Int): String = new String(bytes, o, 4, "US-ASCII")
-    if (bytes.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    // chunk walk: fmt before data, both inside the payload
-    var off = 12
-    var fmtOff = -1
-    var dataOff = -1
-    var dataLen = -1
-    while (off + 8 <= bytes.length && (fmtOff < 0 || dataOff < 0)) {
-      val cid = tag(off)
-      val clen = i32(off + 4)
-      if (clen < 0 || off + 8 + clen.toLong > bytes.length) return None
-      if (cid == "fmt " && clen >= 16) fmtOff = off + 8
-      else if (cid == "data") { dataOff = off + 8; dataLen = clen }
-      off += 8 + clen + (clen & 1) // chunks pad to even length
-    }
-    if (fmtOff < 0 || dataOff < 0) return None
-    val audioFormat = u16(fmtOff)
-    val channels = u16(fmtOff + 2)
-    val sampleRate = i32(fmtOff + 4)
-    val bits = u16(fmtOff + 14)
-    if (audioFormat != 1 || channels < 1 || channels > 8 ||
-        sampleRate <= 0 || sampleRate > 1000000 ||
-        (bits != 8 && bits != 16)) return None
-    val bytesPerFrame = channels * (bits / 8)
-    val frames = dataLen / bytesPerFrame
-    if (frames <= 0) return None
-    val feats = new Array[Float](featDim)
-    val bandFrames = math.max(1L, frames.toLong / featDim)
-    var f = 0
-    while (f < featDim) {
-      val from = f.toLong * frames / featDim
-      val until = math.min(frames.toLong, from + bandFrames)
-      val step = math.max(1L, (until - from) / 1024)
-      var sum = 0.0
-      var n = 0L
-      var fr = from
-      while (fr < until) {
-        var c = 0
-        while (c < channels) {
-          val o = dataOff + fr * bytesPerFrame + c * (bits / 8)
-          val amp =
-            if (bits == 8) math.abs((bytes(o.toInt) & 0xFF) - 128) / 128.0
-            else math.abs(u16(o.toInt).toShort.toInt) / 32768.0
-          sum += amp
-          c += 1
-        }
-        n += channels
-        fr += step
-      }
-      feats(f) = (sum / n).toFloat
-      f += 1
-    }
-    Some(MediaMeta(id, bytes.length, sampleRate, frames, channels, feats))
-  }
-
-  /** (doc_id, payload binary) → typed metadata + feature vector, one
-    * partition-local batch pass. Real BMP / PNG / JPEG / WAV decode when
-    * the payload is one; deterministic stub otherwise.
+  /** (doc_id, payload binary) → typed metadata + feature vector through
+    * `decodeStub`; a null payload decodes as an empty one.
     */
   def extract(media: DataFrame, featDim: Int = 8): Dataset[MediaMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val b = if (bytes == null) Array.empty[Byte] else bytes
-        // defense in depth: a malformed payload must degrade to the
-        // stub, never fail the partition
-        scala.util.Try(decodeBmp(id, b, featDim)).toOption.flatten
-          .orElse(scala.util.Try(decodePng(id, b, featDim)).toOption.flatten)
-          .orElse(scala.util.Try(decodeJpeg(id, b, featDim)).toOption.flatten)
-          .orElse(scala.util.Try(decodeWav(id, b, featDim)).toOption.flatten)
-          .getOrElse(decodeStub(id, b, featDim))
-      })
+      .map { case (id, bytes) =>
+        decodeStub(id, if (bytes == null) Array.empty[Byte] else bytes, featDim)
+      }
   }
 
   /** Frame sampling stand-in: take every `stride`-th byte as a "frame" and

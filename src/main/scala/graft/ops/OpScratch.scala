@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import scala.util.control.NonFatal
 
 /** Registry of persisted intermediates created inside ops entry points.
   *
@@ -30,12 +31,12 @@ object OpScratch {
   def release(): Unit = {
     var d = dfs.poll()
     while (d != null) {
-      try d.unpersist(blocking = false) catch { case _: Throwable => }
+      try d.unpersist(blocking = false) catch { case NonFatal(_) => }
       d = dfs.poll()
     }
     var r = rdds.poll()
     while (r != null) {
-      try r.unpersist(blocking = false) catch { case _: Throwable => }
+      try r.unpersist(blocking = false) catch { case NonFatal(_) => }
       r = rdds.poll()
     }
   }

@@ -7,6 +7,7 @@ import graft.index.{BuildConf, IndexStore}
 import graft.query._
 import graft.model.TrecResult
 import java.io.{File, PrintWriter}
+import scala.util.control.NonFatal
 
 /** spark-submit entry points (the rebuild's counterpart of the reference's
   * RetrieverRunner.main — yairs/eval/RetrieverRunner.scala:21-53).
@@ -235,17 +236,13 @@ object BuildProf {
           // size GC/netty pools for the executor's cores, not the box's
           .config("spark.executor.extraJavaOptions", "-XX:ActiveProcessorCount=4 -Xms5g -XX:+AlwaysPreTouch")
       else builder0
-      val builder1 = builder
+      val spark = builder
         .config("spark.sql.shuffle.partitions", cpus.toString)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.local.dir", s"$base/shuffle-$cpus")
         .config("spark.ui.enabled", "false")
-      // ad-hoc conf experiments: GRAFT_SPARK_CONF="k=v;k=v"
-      val spark = sys.env.get("GRAFT_SPARK_CONF").getOrElse("").split(';')
-        .filter(_.contains('=')).foldLeft(builder1) { (b, kv) =>
-          val Array(k, v) = kv.split("=", 2); b.config(k, v)
-        }.getOrCreate()
+        .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       // per-stage utilization: task-time vs wall tells barrier/straggler
       // problems apart from GC and shuffle-wait problems
@@ -290,7 +287,7 @@ object BuildProf {
         Mains.printStageWalls(dir)
         // free the tmpfs store before the next run (see Bench.timedBuild)
         try new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-        catch { case _: Throwable => }
+        catch { case NonFatal(_) => }
       }
       once("warmup", math.max(4000L, docs / 10))
       (1 to runs).foreach(i => once(s"run$i", docs))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -233,5 +234,5 @@ private final class WarcPartitionReader(file: String,
     })
 
   override def close(): Unit =
-    try in.close() catch { case _: Throwable => }
+    try in.close() catch { case NonFatal(_) => }
 }

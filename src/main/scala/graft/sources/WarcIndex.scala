@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.InputStream
 import java.util.zip.{CRC32, Inflater}
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -61,7 +62,7 @@ object WarcIndex {
         val in = pds.open()
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit] { _ =>
-            try in.close() catch { case _: Throwable => }
+            try in.close() catch { case NonFatal(_) => }
           })
         GzipMembers.iterate(in, WarcSource.MaxRecordBytes).flatMap {
           case (off, len, bytes) =>
@@ -110,7 +111,7 @@ object WarcIndex {
         var curFile: String = null
         var stream: org.apache.hadoop.fs.FSDataInputStream = null
         def close(): Unit =
-          if (stream != null) { try stream.close() catch { case _: Throwable => }; stream = null }
+          if (stream != null) { try stream.close() catch { case NonFatal(_) => }; stream = null }
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => close()))
         it.flatMap { case (file, off, len) =>
@@ -148,7 +149,7 @@ object WarcIndex {
     try {
       in.seek(offset)
       in.readFully(comp)
-    } catch { case _: Throwable => return None }
+    } catch { case NonFatal(_) => return None }
     val it = GzipMembers.iterate(
       new java.io.ByteArrayInputStream(comp), WarcSource.MaxRecordBytes)
     if (it.hasNext) Some(it.next()._3) else None
@@ -275,7 +276,7 @@ private[graft] object GzipMembers {
       if (isize != (outLen.toLong & 0xffffffffL)) return None
       Some((start, cur.position - start, java.util.Arrays.copyOf(out, outLen)))
     } catch {
-      case _: Throwable => None // DataFormatException &c: framing violation
+      case NonFatal(_) => None // DataFormatException &c: framing violation
     } finally inf.end()
   }
 

@@ -3,6 +3,7 @@ package graft.sources
 import java.io.{BufferedInputStream, DataInputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -67,7 +68,7 @@ object WarcSource {
         // drained it, so closing rides task completion, not this scope
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit] { _ =>
-            try in.close() catch { case _: Throwable => }
+            try in.close() catch { case NonFatal(_) => }
           })
         parseStream(in, file)
       }
@@ -82,8 +83,8 @@ object WarcSource {
     * synthetic corpus), lang via the caller's classifier (a crawl's
     * `WARC-Identified-Content-Language` is optional, so the library
     * computes it; [[graft.ops.TextAnalysis.langId]] is the batch
-    * variant). Rows whose extractor throws are dropped — the strict
-    * validate-or-drop contract, same as the decoders.
+    * variant). Rows whose extractor throws are dropped: a page that
+    * cannot be extracted is not indexed.
     */
   def toPages(rows: Dataset[WarcRow],
               extract: Array[Byte] => String,
@@ -171,7 +172,7 @@ object WarcSource {
             case "warc-target-uri" => uri = stripAngles(v)
             case "warc-date"       => date = v
             case "content-type"    => ctype = v
-            case "content-length"  => len = try v.toLong catch { case _: Throwable => -1L }
+            case "content-length"  => len = v.toLongOption.getOrElse(-1L)
             case _                 =>
           }
         }
@@ -184,8 +185,6 @@ object WarcSource {
       // record trailer: two CRLFs (tolerate their absence at EOF)
       skipCrlf(in); skipCrlf(in)
       if (warcType != "response" || uri.isEmpty) return SkippedRecord
-      // no .getOrElse(return …): a non-local return from that lambda is a
-      // ControlThrowable and the catch below would misread it as EOF
       val tsOpt = parseWarcDate(date)
       if (tsOpt.isEmpty) return SkippedRecord
       val ts = tsOpt.get
@@ -205,8 +204,10 @@ object WarcSource {
           mimeOf(ctype), file))
       }
     } catch {
-      case _: EOFException => EndOfStream
-      case _: Throwable    => EndOfStream
+      // EOFException and malformed input alike: the cursor is lost. A
+      // fatal error (OOM, an interrupted task) propagates instead of
+      // reading as a silently truncated file.
+      case NonFatal(_) => EndOfStream
     }
 
   private def stripAngles(s: String): String =
@@ -216,7 +217,7 @@ object WarcSource {
 
   private def parseWarcDate(s: String): Option[java.sql.Timestamp] =
     try Some(java.sql.Timestamp.from(java.time.Instant.parse(s)))
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
 
   private def mimeOf(ctype: String): String = {
     val semi = ctype.indexOf(';')
@@ -234,9 +235,8 @@ object WarcSource {
     val lines = head.split("\r\n")
     if (lines.isEmpty || !lines(0).startsWith("HTTP/")) return None
     val parts = lines(0).split(" ")
-    val status = if (parts.length >= 2)
-      try parts(1).toInt catch { case _: Throwable => return None }
-    else return None
+    val status = parts.lift(1).flatMap(_.toIntOption)
+    if (status.isEmpty) return None
     var mime = ""
     var chunked = false
     lines.iterator.drop(1).foreach { l =>
@@ -252,7 +252,7 @@ object WarcSource {
     }
     val rawBody = java.util.Arrays.copyOfRange(payload, sep + 4, payload.length)
     val body = if (chunked) dechunk(rawBody).getOrElse(rawBody) else rawBody
-    Some((status, mime, body))
+    Some((status.get, mime, body))
   }
 
   private def indexOfCrlfCrlf(b: Array[Byte]): Int = {
@@ -287,7 +287,8 @@ object WarcSource {
       if (l == null) return None
       val semi = l.indexOf(';')
       val hex = (if (semi >= 0) l.substring(0, semi) else l).trim
-      val n = try Integer.parseInt(hex, 16) catch { case _: Throwable => return None }
+      val n = try Integer.parseInt(hex, 16)
+              catch { case _: NumberFormatException => return None }
       if (n < 0 || i + n > b.length) return None
       if (n == 0) doneChunks = true
       else {

@@ -364,253 +364,41 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("multimodal extract: deterministic metadata + feature shape") {
-    val media = docs.limit(50).select(col("doc_id"),
+    // a valid 3×2 24bpp uncompressed BMP (54-byte header + two rows padded
+    // to 12 bytes): extract decodes no media format, so an image payload
+    // gets the stub's length-derived geometry like any text payload
+    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
+      (v >> 16).toByte, (v >> 24).toByte)
+    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
+    val bmp =
+      Array('B'.toByte, 'M'.toByte) ++ le32(78) ++ le32(0) ++ le32(54) ++
+        le32(40) ++ le32(3) ++ le32(2) ++ le16(1) ++ le16(24) ++ le32(0) ++
+        le32(24) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0) ++
+        Array.fill[Byte](9)(10) ++ Array.fill[Byte](3)(0) ++
+        Array.fill[Byte](9)(200.toByte) ++ Array.fill[Byte](3)(0)
+    assert(bmp.length == 78)
+    val bmpId = -1L
+    val media = docs.limit(50).select(col("doc_id").cast("long"),
       col("text").cast("binary").as("payload"))
+      .union(Seq((bmpId, bmp)).toDF("doc_id", "payload"))
+    val payloads = media.as[(Long, Array[Byte])].collect().toMap
+    assert(payloads.size == 51)
     val metas = Multimodal.extract(media, featDim = 8).collect()
-    assert(metas.length == 50)
+    assert(metas.length == 51)
     metas.foreach { m =>
+      val stub = Multimodal.decodeStub(m.doc_id, payloads(m.doc_id), 8)
+      assert(m.copy(features = null) == stub.copy(features = null))
+      assert(m.features.toSeq == stub.features.toSeq)
       assert(m.features.length == 8)
       assert(m.features.forall(f => f >= 0.0f && f <= 1.0f))
       assert(m.channels >= 1 && m.channels <= 3)
     }
+    val image = metas.find(_.doc_id == bmpId).get
+    assert(image.n_bytes == 78 && image.width == 64 + 78 % 577 &&
+      image.height == 64 + (78 / 7) % 449 && image.channels == 1 + 78 % 3)
     // deterministic across runs
     val again = Multimodal.extract(media, featDim = 8).collect()
     assert(metas.map(_.width).sorted.sameElements(again.map(_.width).sorted))
-  }
-
-  test("multimodal decode: a real BMP decodes its true geometry + pixels") {
-    // hand-built 3×2 24bpp uncompressed BMP: bottom row solid 10s, top row
-    // solid 200s (BMP stores rows bottom-up; rows pad to 4 bytes)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    val rowBytes = 12 // 3 px × 3 ch = 9, padded to 12
-    val fileSize = 54 + 2 * rowBytes
-    val header =
-      Array('B'.toByte, 'M'.toByte) ++ le32(fileSize) ++ le32(0) ++ le32(54) ++
-        le32(40) ++ le32(3) ++ le32(2) ++ le16(1) ++ le16(24) ++ le32(0) ++
-        le32(2 * rowBytes) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
-    val bottom = Array.fill[Byte](9)(10) ++ Array.fill[Byte](3)(0)
-    val top = Array.fill[Byte](9)(200.toByte) ++ Array.fill[Byte](3)(0)
-    val bmp = header ++ bottom ++ top
-    assert(header.length == 54 && bmp.length == fileSize)
-
-    val m = Multimodal.decodeBmp(7L, bmp, featDim = 2).get
-    assert(m.width == 3 && m.height == 2 && m.channels == 3 &&
-      m.n_bytes == fileSize)
-    // band 0 = image top (storage row 1) = 200s; band 1 = bottom = 10s
-    assert(math.abs(m.features(0) - 200f / 255f) < 1e-6)
-    assert(math.abs(m.features(1) - 10f / 255f) < 1e-6)
-
-    // the same bytes through the Spark plumbing hit the real-decode path
-    val media = spark.createDataset(Seq((7L, bmp))).toDF("doc_id", "payload")
-    val viaExtract = Multimodal.extract(media, featDim = 2).collect()(0)
-    assert(viaExtract.width == 3 && viaExtract.height == 2)
-
-    // a text payload does NOT false-positive into the BMP path
-    assert(Multimodal.decodeBmp(1L, "BMnot an image at all, just text that is long enough".getBytes, 2).isEmpty)
-
-    // adversarial headers whose 32-bit arithmetic would overflow past the
-    // bounds check must return None, not crash or emit garbage geometry
-    def hdr(width: Int, height: Int) =
-      Array('B'.toByte, 'M'.toByte) ++ le32(58) ++ le32(0) ++ le32(54) ++
-        le32(40) ++ le32(width) ++ le32(height) ++ le16(1) ++ le16(24) ++
-        le32(0) ++ le32(4) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0) ++
-        Array[Byte](0, 0, 0, 0)
-    assert(Multimodal.decodeBmp(1L, hdr(1, Int.MinValue), 2).isEmpty)
-    assert(Multimodal.decodeBmp(1L, hdr(715827883, 1), 2).isEmpty)
-    assert(Multimodal.decodeBmp(1L, hdr(1 << 21, 1), 2).isEmpty)
-  }
-
-  test("multimodal decode: a real PNG decodes through all scanline filters") {
-    // hand-built 3×4 RGB PNG: each row uses a different filter type
-    // (None/Sub/Up/Paeth), encoded by applying the PNG filter forward —
-    // the decoder must invert all of them exactly
-    val width = 3; val height = 4; val ch = 3
-    val pixels: Array[Array[Int]] = Array(
-      Array(10, 20, 30, 40, 50, 60, 70, 80, 90),
-      Array(110, 120, 130, 140, 150, 160, 170, 180, 190),
-      Array(115, 125, 135, 145, 155, 165, 175, 185, 195),
-      Array.fill(9)(200))
-    val filters = Array(0, 1, 2, 4)
-    def paeth(a: Int, b: Int, c: Int): Int = {
-      val p = a + b - c
-      val (pa, pb, pc) = (math.abs(p - a), math.abs(p - b), math.abs(p - c))
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
-    val scan = new java.io.ByteArrayOutputStream()
-    for (y <- 0 until height) {
-      scan.write(filters(y))
-      for (x <- 0 until width * ch) {
-        val a = if (x >= ch) pixels(y)(x - ch) else 0
-        val b = if (y > 0) pixels(y - 1)(x) else 0
-        val c = if (x >= ch && y > 0) pixels(y - 1)(x - ch) else 0
-        val pred = filters(y) match {
-          case 0 => 0
-          case 1 => a
-          case 2 => b
-          case 4 => paeth(a, b, c)
-        }
-        scan.write((pixels(y)(x) - pred) & 0xFF)
-      }
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(scan.toByteArray); defl.finish()
-    val zBuf = new Array[Byte](1024)
-    val zOut = new java.io.ByteArrayOutputStream()
-    while (!defl.finished()) zOut.write(zBuf, 0, defl.deflate(zBuf))
-    def be32(v: Int) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
-    def chunk(ctype: String, data: Array[Byte]): Array[Byte] = {
-      val crc = new java.util.zip.CRC32()
-      crc.update(ctype.getBytes("US-ASCII")); crc.update(data)
-      be32(data.length) ++ ctype.getBytes("US-ASCII") ++ data ++
-        be32(crc.getValue.toInt)
-    }
-    val sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
-    val ihdr = be32(width) ++ be32(height) ++
-      Array[Byte](8, 2, 0, 0, 0) // 8-bit, RGB, non-interlaced
-    val png = sig ++ chunk("IHDR", ihdr) ++ chunk("IDAT", zOut.toByteArray) ++
-      chunk("IEND", Array.empty[Byte])
-
-    val m = Multimodal.decodePng(9L, png, featDim = 4).get
-    assert(m.width == 3 && m.height == 4 && m.channels == 3)
-    for (y <- 0 until 4) {
-      val mean = pixels(y).sum.toDouble / 9 / 255.0
-      assert(math.abs(m.features(y) - mean) < 1e-6,
-        s"row $y: ${m.features(y)} vs $mean")
-    }
-
-    // through the Spark plumbing → real-decode path
-    val media = spark.createDataset(Seq((9L, png))).toDF("doc_id", "payload")
-    val via = Multimodal.extract(media, featDim = 4).collect()(0)
-    assert(via.width == 3 && via.height == 4 && via.channels == 3)
-
-    // a flipped CRC byte, truncation, and interlaced flag all reject
-    val bad = png.clone(); bad(bad.length - 1) = (bad.last ^ 0x7F).toByte
-    assert(Multimodal.decodePng(1L, bad, 4).isEmpty)
-    assert(Multimodal.decodePng(1L, png.take(png.length - 20), 4).isEmpty)
-    val inter = sig ++ chunk("IHDR", be32(3) ++ be32(4) ++
-      Array[Byte](8, 2, 0, 0, 1)) ++ chunk("IDAT", zOut.toByteArray) ++
-      chunk("IEND", Array.empty[Byte])
-    assert(Multimodal.decodePng(1L, inter, 4).isEmpty)
-  }
-
-  test("multimodal decode: a real PCM WAV decodes geometry + loudness bands") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    // 16-bit mono PCM, 8000 Hz, 8 frames with known samples
-    val samples = Seq(16384, -16384, 0, 32767, 8192, -8192, 0, -32768)
-    val data = samples.flatMap(le16).toArray
-    val wav =
-      "RIFF".getBytes ++ le32(36 + data.length) ++ "WAVE".getBytes ++
-        "fmt ".getBytes ++ le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++
-        le32(16000) ++ le16(2) ++ le16(16) ++
-        "data".getBytes ++ le32(data.length) ++ data
-    val m = Multimodal.decodeWav(5L, wav, featDim = 2).get
-    assert(m.width == 8000 && m.height == 8 && m.channels == 1)
-    val b0 = (16384.0 + 16384 + 0 + 32767) / 4 / 32768
-    val b1 = (8192.0 + 8192 + 0 + 32768) / 4 / 32768
-    assert(math.abs(m.features(0) - b0) < 1e-6, m.features.toSeq.toString)
-    assert(math.abs(m.features(1) - b1) < 1e-6)
-
-    // through the Spark plumbing → real-decode path
-    val media = spark.createDataset(Seq((5L, wav))).toDF("doc_id", "payload")
-    val via = Multimodal.extract(media, featDim = 2).collect()(0)
-    assert(via.width == 8000 && via.height == 8)
-
-    // float PCM (format 3) and truncated payloads fall back, not crash
-    val floatWav = wav.clone(); floatWav(20) = 3
-    assert(Multimodal.decodeWav(1L, floatWav, 2).isEmpty)
-    assert(Multimodal.decodeWav(1L, wav.take(40), 2).isEmpty)
-    assert(Multimodal.decodeWav(1L, "RIFFnot really audio content here".getBytes, 2).isEmpty)
-  }
-
-  test("multimodal decode: a real baseline JPEG decodes via Huffman + IDCT") {
-    import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-    // fixture: the JDK's own JPEG encoder (real JFIF output — SOI/APP0/
-    // DQT/SOF0/DHT/SOS/EOI with byte stuffing); the JDK decoder is then
-    // an INDEPENDENT oracle for the band features
-    def encode(img: BufferedImage): Array[Byte] = {
-      val baos = new java.io.ByteArrayOutputStream()
-      assert(ImageIO.write(img, "jpg", baos), "JDK JPEG writer unavailable")
-      baos.toByteArray
-    }
-    def bandMeans(lumaAt: (Int, Int) => Double, w: Int, h: Int,
-                  featDim: Int): Array[Double] =
-      Array.tabulate(featDim) { f =>
-        val r = (f.toLong * h / featDim).toInt
-        (0 until w).map(x => lumaAt(x, r)).sum / w / 255.0
-      }
-
-    // --- grayscale: single-component scan, luma is exact -------------
-    val gw = 64; val gh = 48
-    val gray = new BufferedImage(gw, gh, BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until gh; x <- 0 until gw) {
-      val v = (x * 4 + y * 3 + (if ((x / 8 + y / 8) % 2 == 0) 40 else 0)) % 256
-      gray.getRaster.setSample(x, y, 0, v)
-    }
-    val gBytes = encode(gray)
-    val gm = Multimodal.decodeJpeg(11L, gBytes, featDim = 6).get
-    assert(gm.width == gw && gm.height == gh && gm.channels == 1)
-    val gOracle = ImageIO.read(new java.io.ByteArrayInputStream(gBytes))
-    val gExp = bandMeans((x, y) => gOracle.getRaster.getSample(x, y, 0),
-      gw, gh, 6)
-    for (f <- 0 until 6)
-      assert(math.abs(gm.features(f) - gExp(f)) < 0.01,
-        s"gray band $f: ${gm.features(f)} vs ${gExp(f)}")
-
-    // T.81 A.2: declared sampling factors do NOT expand the MCU of a
-    // single-component (non-interleaved) scan — patch SOF0's H/V from
-    // 1×1 to 2×2 (legal, emitted by some encoders) and the identical
-    // entropy stream must decode to the identical features
-    val g22 = gBytes.clone()
-    val g22Sof = g22.indices.find(i => (g22(i) & 0xFF) == 0xFF &&
-      (g22(i + 1) & 0xFF) == 0xC0).get
-    assert((g22(g22Sof + 11) & 0xFF) == 0x11, "fixture SOF0 layout drifted")
-    g22(g22Sof + 11) = 0x22.toByte
-    val gm22 = Multimodal.decodeJpeg(13L, g22, featDim = 6).get
-    assert(gm22.width == gw && gm22.height == gh)
-    assert(gm22.features.toSeq == gm.features.toSeq,
-      "H=V=2 grayscale (non-interleaved scan) must decode identically")
-
-    // --- RGB: 3-component interleaved scan (chroma decoded + discarded);
-    // oracle luma via the JPEG Y formula over the JDK's decoded RGB
-    // (YCbCr→RGB→Y round trip, so a slightly looser tolerance)
-    val cw = 40; val chh = 32
-    val rgb = new BufferedImage(cw, chh, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until chh; x <- 0 until cw)
-      rgb.setRGB(x, y, ((x * 6 % 256) << 16) | ((y * 7 % 256) << 8) |
-        ((x + y) * 3 % 256))
-    val cBytes = encode(rgb)
-    val cm = Multimodal.decodeJpeg(12L, cBytes, featDim = 4).get
-    assert(cm.width == cw && cm.height == chh && cm.channels == 3)
-    val cOracle = ImageIO.read(new java.io.ByteArrayInputStream(cBytes))
-    val cExp = bandMeans({ (x, y) =>
-      val p = cOracle.getRGB(x, y)
-      0.299 * ((p >> 16) & 0xFF) + 0.587 * ((p >> 8) & 0xFF) +
-        0.114 * (p & 0xFF)
-    }, cw, chh, 4)
-    for (f <- 0 until 4)
-      assert(math.abs(cm.features(f) - cExp(f)) < 0.02,
-        s"rgb band $f: ${cm.features(f)} vs ${cExp(f)}")
-
-    // through the Spark plumbing → real-decode path (not the stub)
-    val media = spark.createDataset(Seq((11L, gBytes))).toDF("doc_id", "payload")
-    val via = Multimodal.extract(media, featDim = 6).collect()(0)
-    assert(via.width == gw && via.height == gh && via.channels == 1)
-
-    // strictness: progressive (SOF2), truncation, and text all reject
-    val prog = gBytes.clone()
-    val sofAt = prog.indices.find(i => (prog(i) & 0xFF) == 0xFF &&
-      i + 1 < prog.length && (prog(i + 1) & 0xFF) == 0xC0).get
-    prog(sofAt + 1) = 0xC2.toByte
-    assert(Multimodal.decodeJpeg(1L, prog, 4).isEmpty)
-    assert(Multimodal.decodeJpeg(1L, gBytes.take(gBytes.length / 2), 4).isEmpty)
-    assert(Multimodal.decodeJpeg(1L,
-      "ÿØnot actually a jpeg payload".getBytes("ISO-8859-1"), 4).isEmpty)
   }
 
   test("duplicateClusters: components via label propagation, multi-round chains") {

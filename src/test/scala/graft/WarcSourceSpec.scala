@@ -110,4 +110,20 @@ class WarcSourceSpec extends AnyFunSuite {
       new ByteArrayInputStream(cut), "mem").toVector
     assert(rows.length == 3)
   }
+
+  test("a fatal read error propagates instead of ending the file") {
+    // one complete record, then the stream fails the way an interrupted
+    // task's read does: the error must reach the task, not read as EOF
+    val record = new ByteArrayInputStream(writeRecords(pages.take(1)).toByteArray)
+    val failing = new java.io.InputStream {
+      private def interrupted = new InterruptedException("read interrupted")
+      def read(): Int = { val b = record.read(); if (b < 0) throw interrupted; b }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = record.read(b, off, len); if (n < 0) throw interrupted; n
+      }
+    }
+    val rows = WarcSource.parseStream(failing, "mem")
+    assert(rows.next().url == pages(0).url)
+    intercept[InterruptedException](rows.hasNext)
+  }
 }
