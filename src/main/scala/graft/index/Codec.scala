@@ -52,7 +52,6 @@ object Codec {
   }
 
   final class Input(bytes: Array[Byte], var pos: Int = 0) {
-    def hasMore: Boolean = pos < bytes.length
     def readVLong(): Long = {
       var shift = 0
       var out = 0L
@@ -85,26 +84,6 @@ object Codec {
       out.writeVInt(positions(i) - prev)
       prev = positions(i)
       i += 1
-    }
-    out.toBytes
-  }
-
-  /** Encode the concatenation of two position runs, the second shifted by
-    * `off` — the default field's positions are the title run followed by
-    * the body run at offset |title| (both runs ascending, so deltas stay
-    * non-negative). Byte-identical to encoding the materialized merge.
-    */
-  def encodePositionsMerged(a: Array[Int], an: Int,
-                            b: Array[Int], bn: Int, off: Int): Array[Byte] = {
-    val out = new Output(4 + (an + bn) * 2)
-    out.writeVInt(an + bn)
-    var prev = 0
-    var i = 0
-    while (i < an) { out.writeVInt(a(i) - prev); prev = a(i); i += 1 }
-    i = 0
-    while (i < bn) {
-      val p = b(i) + off
-      out.writeVInt(p - prev); prev = p; i += 1
     }
     out.toBytes
   }
@@ -186,10 +165,12 @@ object Codec {
       while (i < np) { out.writeVInt(pos(i) - prevP); prevP = pos(i); i += 1 }
     }
 
-    /** Concatenation of two ascending position runs, the second shifted by
-      * `off` — byte-identical to `add(docId, an+bn, dl,
-      * encodePositionsMerged(a, an, b, bn, off))` (the default field's
-      * title-run + body-run posting).
+    /** A posting whose positions are two ascending runs, the second
+      * shifted by `off` (the default field's title run, then its body run
+      * at offset |title|): written as `an + bn` followed by the delta of
+      * each position of the concatenated run from the one before it (the
+      * first from 0), all varints — the bytes [[addPositions]] writes for
+      * the merged array, which is never materialized.
       */
     def addPositionsMerged(docId: Long, dl: Int, a: Array[Int], an: Int,
                            b: Array[Int], bn: Int, off: Int): Unit = {

@@ -32,39 +32,28 @@ import graft.query.expressions.{DoubleParam, QueryExpressions}
   *    lowered exactly as union → groupBy(docId) → sum(contrib) + lit(C).
   *    No outer join needed; one shuffle for any fan-in.
   *  - #NEAR/k → left-fold of inner joins on docId + nearMatches kernel,
-  *    then a two-pass virtual-term rescore (cf/df aggregated first), like
-  *    StructuredRetriever.scala:123-171.
+  *    then a virtual-term rescore, like StructuredRetriever.scala:123-171:
+  *    the matches' cf/df aggregate to one row inside the query's own plan,
+  *    which is broadcast and joined back to score every match.
   *  - #UW/k → single groupBy(docId) gathering all children (count == n
   *    enforces the all-lists requirement of
-  *    MultimergeSturcturedRetriever.scala:117), uwMatches kernel, two-pass
+  *    MultimergeSturcturedRetriever.scala:117), uwMatches kernel, the same
   *    rescore.
   *
-  * Every lowered node carries its defaultScore (driver-side Double) — the
-  * absent-term correction of the k-way merge.
+  * Every lowered node carries its defaultScore — the absent-term
+  * correction of the k-way merge: a driver-side Double for leaves and
+  * merges over them, a column of that stats row for a #NEAR/#UW node and
+  * merges over one. Lowering submits no Spark job and caches nothing.
   */
 class Engine(val index: SearchIndex, val model: Model,
              val defaultField: String = "default") extends Serializable {
 
   val scorer = new Scorer(model, index.collStats)
 
-  /** DataFrames persisted by positional rescoring (rescoreVirtual), pending
-    * release. Persisting spans two passes (stats collect, then consumption);
-    * callers that materialize results (searchAll, QueryMain) call
-    * releaseCaches() afterwards so a long run over many positional queries
-    * does not accumulate cache entries (one entry per NEAR/UW node
-    * otherwise lives for the session).
+  /** Does nothing: lowering caches no frame, so a query leaves nothing to
+    * release. Kept for callers written against the earlier API.
     */
-  @transient private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist every DataFrame pinned by positional evaluation since the
-    * last release. Safe while downstream plans are still referenced — they
-    * recompute instead of reading cache.
-    */
-  def releaseCaches(): Unit = {
-    var df = pinned.poll()
-    while (df != null) { df.unpersist(blocking = false); df = pinned.poll() }
-  }
+  def releaseCaches(): Unit = ()
 
   private val postingsSchema = StructType(Seq(
     StructField("docId", LongType, nullable = false),
@@ -78,14 +67,32 @@ class Engine(val index: SearchIndex, val model: Model,
   /** A lowered query node: scored postings + the node's default score
     * (what an absent doc would contribute under a weighted merge).
     */
-  case class Lowered(df: DataFrame, default: Double)
+  case class Lowered(df: DataFrame, default: Default)
+
+  /** A node's default score; `finite` decides a weighted merge's path. */
+  sealed trait Default { def finite: Boolean }
+
+  /** A default known on the driver: a leaf's, or a merge's over leaves. */
+  case class Known(value: Double) extends Default {
+    def finite: Boolean = java.lang.Double.isFinite(value)
+  }
+
+  /** A default the query's own plan computes: element 0 of the array
+    * column `t` of `row`, a one-row frame (a #NEAR/#UW node's virtual-term
+    * stats, or a merge's over such a node). One opaque array, not a struct
+    * whose fields the optimizer would prune apart per consumer, so every
+    * join of `row` plans the same broadcast and Spark runs it once.
+    * `finite` holds for every value the row can take
+    * ([[Scorer.defaultsFinite]]), so no job runs to learn it.
+    */
+  case class Planned(row: DataFrame, finite: Boolean) extends Default
 
   /** A node's children as one frame of merge input: rows tagged with the
     * child index `cidx` that carry the child's absent-term default `d` and
     * weight `w` ([[childrenSchema]]); `defaults` lists every child's
     * default in child order.
     */
-  private case class Children(rows: DataFrame, defaults: Seq[Double])
+  private case class Children(rows: DataFrame, defaults: Seq[Default])
 
   private val childrenSchema = StructType(
     postingsSchema.fields.take(1) ++
@@ -100,7 +107,7 @@ class Engine(val index: SearchIndex, val model: Model,
   private def emptyOf(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  private def emptyLowered: Lowered = Lowered(emptyOf(postingsSchema), 0.0)
+  private def emptyLowered: Lowered = Lowered(emptyOf(postingsSchema), Known(0.0))
 
   // ---------------------------------------------------------------- leaves
 
@@ -134,18 +141,23 @@ class Engine(val index: SearchIndex, val model: Model,
   }
 
   /** Lower `kids` (stop leaves already pruned) as merge input: the leaves
-    * as one [[leafGroup]], each inner child lowered and tagged lit(cidx).
+    * as one [[leafGroup]], each inner child lowered and tagged lit(cidx),
+    * its default a parameter if Known, else read from its broadcast row.
     */
   private def children(kids: Seq[QNode], weights: Seq[Double]): Children = {
     val leaves = kids.zipWithIndex.collect { case (l: QLeaf, i) => (l, i, weights(i)) }
     val (leafRows, leafDefaults) = leafGroup(leaves)
     val inner = kids.zipWithIndex.collect { case (n: QInner, i) => i -> lowerInner(n) }
     val parts = leafRows.toSeq ++ inner.map { case (i, lw) =>
-      lw.df.select(col("docId"), lit(i).as("cidx"), col("score"), col("tf"),
-        col("dl"), col("positions"), DoubleParam.column(lw.default).as("d"),
+      val (rows, d) = lw.default match {
+        case Known(v)        => (lw.df, DoubleParam.column(v))
+        case Planned(row, _) => (lw.df.crossJoin(broadcast(row)), col("t")(0))
+      }
+      rows.select(col("docId"), lit(i).as("cidx"), col("score"), col("tf"),
+        col("dl"), col("positions"), d.as("d"),
         DoubleParam.column(weights(i)).as("w"))
     }
-    val defaults = (leaves.map(_._2).zip(leafDefaults) ++
+    val defaults = (leaves.map(_._2).zip(leafDefaults.map(Known)) ++
       inner.map { case (i, lw) => i -> lw.default }).sortBy(_._1).map(_._2)
     // The union starts from an empty frame even when the leaf group is the
     // only part: a Union ends whole-stage codegen, so the scan's class is
@@ -169,12 +181,12 @@ class Engine(val index: SearchIndex, val model: Model,
     val merged = c.rows.groupBy("docId")
       .agg(min("score").as("score"), count(lit(1)).as("cnt"))
       .filter(col("cnt") === c.defaults.length).drop("cnt")
-    Lowered(opaque(merged), 0.0)
+    Lowered(opaque(merged), Known(0.0))
   }
 
   private def boolOr(c: Children): Lowered = {
     val merged = c.rows.groupBy("docId").agg(max("score").as("score"))
-    Lowered(opaque(merged), 0.0)
+    Lowered(opaque(merged), Known(0.0))
   }
 
   /** k-way union-with-defaults merge (BM25/Indri AND, SUM, WEIGHT).
@@ -183,93 +195,97 @@ class Engine(val index: SearchIndex, val model: Model,
     * score(doc) = Σ_present wᵢ(sᵢ − dᵢ) + Σ_all wᵢdᵢ — a plain
     * sum-aggregate with map-side partial combine.
     *
-    * Exact path (any non-finite default — e.g. k1 = 0 makes the BM25
-    * absent-term default 0/0 = NaN, a configuration the reference's sweep
-    * runs actually exercise): the algebraic identity would poison present
-    * docs with NaN, so instead gather per-child scores and replay the
-    * reference's child-order summation per doc
+    * Exact path (a default that may be non-finite — e.g. k1 = 0 makes the
+    * BM25 absent-term default 0/0 = NaN, a configuration the reference's
+    * sweep runs actually exercise): the algebraic identity would poison
+    * present docs with NaN, so instead gather per-child scores and replay
+    * the reference's child-order summation per doc
     * (MultimergeSturcturedRetriever.scala:53-71) — absent children
     * contribute wᵢdᵢ, present ones wᵢsᵢ, NaN stays confined to the docs
     * the reference gives NaN to.
+    *
+    * Σ wᵢdᵢ over Planned child defaults is a column of the merged rows,
+    * which join each such child's row, and the merge's default is Planned.
     */
   private def weightedMerge(c: Children, weights: Seq[Double]): Lowered = {
-    val combined = c.defaults.zip(weights).map { case (d, w) => d * w }.sum
-    val allFinite = c.defaults.forall(d => java.lang.Double.isFinite(d))
-
-    val merged = if (allFinite) {
-      c.rows.groupBy("docId")
-        .agg((sum((col("score") - col("d")) * col("w")) +
-          DoubleParam.column(combined)).as("score"))
-    } else {
-      val ws = weights.toArray
-      val ds = c.defaults.toArray
-      val mergeUdf = udf { (cs: Seq[Row]) =>
-        val present = new Array[Double](ws.length)
-        val has = new Array[Boolean](ws.length)
-        cs.foreach { r =>
-          val i = r.getInt(0)
-          present(i) = r.getDouble(1)
-          has(i) = true
-        }
-        var total = 0.0
-        var i = 0
-        while (i < ws.length) {
-          total += (if (has(i)) present(i) * ws(i) else ds(i) * ws(i))
-          i += 1
-        }
-        total
-      }
-      c.rows.groupBy("docId")
-        .agg(collect_list(struct(col("cidx"), col("score"))).as("cs"))
-        .select(col("docId"), mergeUdf(col("cs")).as("score"))
+    // child i's Planned row joins as `c<i>`: the very frame its node joins
+    // too, so Spark broadcasts it once for both
+    val planned = c.defaults.zipWithIndex.collect {
+      case (Planned(row, _), i) => row.as(s"c$i")
     }
-    Lowered(opaque(merged), combined)
+    def withPlanned(df: DataFrame) =
+      planned.foldLeft(df)((acc, row) => acc.crossJoin(broadcast(row)))
+    val ds = c.defaults.zipWithIndex.map {
+      case (Known(v), _) => DoubleParam.column(v)
+      case (_, i)        => col(s"c$i.t")(0)
+    }
+    val (default, combined) = if (planned.isEmpty) {
+      val v = c.defaults.collect { case Known(d) => d }
+        .zip(weights).map { case (d, w) => d * w }.sum
+      (Known(v), DoubleParam.column(v))
+    } else {
+      val total = ds.zip(weights)
+        .map { case (d, w) => d * DoubleParam.column(w) }.reduce(_ + _)
+      (Planned(planned.reduce(_ crossJoin _).select(array(total).as("t")),
+        c.defaults.forall(_.finite) && weights.forall(java.lang.Double.isFinite)), total)
+    }
+
+    val merged = if (c.defaults.forall(_.finite)) {
+      val summed = c.rows.groupBy("docId")
+        .agg(sum((col("score") - col("d")) * col("w")).as("score"))
+      withPlanned(summed).select(col("docId"), (col("score") + combined).as("score"))
+    } else {
+      val gathered = c.rows.groupBy("docId")
+        .agg(map_from_entries(collect_list(struct(col("cidx"), col("score")))).as("s"))
+      val (dArr, wArr) = (array(ds: _*), array(weights.map(DoubleParam.column): _*))
+      withPlanned(gathered).select(col("docId"),
+        aggregate(sequence(lit(0), lit(weights.length - 1)), lit(0.0), (acc, i) =>
+          acc + coalesce(col("s")(i), element_at(dArr, i + 1)) *
+            element_at(wArr, i + 1)).as("score"))
+    }
+    Lowered(opaque(merged), default)
   }
 
-  /** Two-pass virtual-term construction shared by NEAR and UW: aggregate
-    * the virtual cf/df over the matched postings, then score every posting
-    * with the term scorer (reference does the same second pass:
+  /** Virtual-term construction shared by NEAR and UW: the matches' cf/df
+    * aggregate to one row (default, p1, p2) — the scorer's own driver-side
+    * functions, run on that row — broadcast and joined back to score every
+    * match with the term scorer (the reference's second pass:
     * StructuredRetriever.scala:165-168,
-    * MultimergeSturcturedRetriever.scala:154-164).
+    * MultimergeSturcturedRetriever.scala:154-164). All of it is plan: no
+    * job runs and nothing is cached before the query's own action.
     */
   private def rescoreVirtual(matched: DataFrame, uwEmptyRule: Boolean): Lowered = {
-    val m = matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val statsRow = m.agg(
-      coalesce(sum("tf"), lit(0L)).cast("long").as("cf"),
-      count(lit(1)).as("df")).collect()(0)
-    val cfV = statsRow.getLong(0)
-    val dfV = statsRow.getLong(1)
-    if (uwEmptyRule && cfV == 0L) {
+    val s = scorer // the function ships the scorer, not the Engine
+    val term = udf { (cf: Long, df: Long) =>
+      val (p1, p2) = s.termParams(cf, df)
       // UW with zero matches returns the empty list with default 0
       // (MultimergeSturcturedRetriever.scala:161-162), NOT the scored
-      // default — for Indri those differ (scorer(0,0,0,avgdl) = MIN_VALUE).
-      m.unpersist()
-      return emptyLowered
+      // default — for Indri those differ (scorer(0,0,0,avgdl) = MIN_VALUE)
+      Seq(if (uwEmptyRule && cf == 0L) 0.0 else s.defaultScore(cf, df), p1, p2)
     }
-    pinned.add(m)
-    val scored = m.select(
+    val params = matched.agg(term(coalesce(sum("tf"), lit(0L)).cast("long"),
+      count(lit(1))).as("t"))
+    val scored = matched.crossJoin(broadcast(params)).select(
       col("docId"),
-      scorer.termScoreCol(cfV, dfV, col("tf"), col("dl")).as("score"),
+      scorer.termScoreCol((col("t")(1), col("t")(2)), col("tf"), col("dl")).as("score"),
       col("tf"), col("dl"), col("positions"))
-    Lowered(scored, scorer.defaultScore(cfV, dfV))
+    Lowered(scored, Planned(params, scorer.defaultsFinite))
   }
 
   private def near(children: Seq[Lowered], k: Int): Lowered = {
     if (children.length == 1) return children.head // fold pass-through
                                                    // (StructuredRetriever.scala:58-67)
-    val matched = children.reduceLeft { (l, r) =>
-      val left = l.df.select(col("docId"), col("dl"),
-        col("positions").as("pos1"))
-      val right = r.df.select(col("docId"), col("positions").as("pos2"))
-      val joined = left.join(right, Seq("docId"), "inner")
+    val matched = children.map(_.df).reduceLeft { (l, r) =>
+      val left = l.select(col("docId"), col("dl"), col("positions").as("pos1"))
+      val right = r.select(col("docId"), col("positions").as("pos2"))
+      left.join(right, Seq("docId"), "inner")
         .withColumn("mpos", expr(s"near_matches(pos1, pos2, $k)"))
         .filter(size(col("mpos")) > 0)
         // tf = #matches; dl kept from the LEFT posting; positions = matched
         // right-hand positions (StructuredRetriever.scala:139-147)
         .select(col("docId"), lit(0.0).as("score"),
           size(col("mpos")).as("tf"), col("dl"), col("mpos").as("positions"))
-      Lowered(joined, 0.0)
-    }.df
+    }
     rescoreVirtual(matched, uwEmptyRule = false)
   }
 
@@ -313,7 +329,8 @@ class Engine(val index: SearchIndex, val model: Model,
       // union, so the planner still sees the scan's size and can
       // broadcast it into the join
       val (rows, defaults) = leafGroup(Seq((l, 0, 1.0)))
-      rows.fold(emptyLowered)(r => Lowered(r.select(postingCols: _*), defaults.head))
+      rows.fold(emptyLowered)(r =>
+        Lowered(r.select(postingCols: _*), Known(defaults.head)))
     case inner: QInner => lowerInner(inner)
   }
 
@@ -412,9 +429,8 @@ class Engine(val index: SearchIndex, val model: Model,
     * concurrently from a small driver pool — each query's work is tiny
     * relative to job-scheduling latency, so a batch run (the reference's
     * headline metric is the 30-query total wall) overlaps those
-    * latencies. Results keep query order; caches pinned by positional
-    * rescoring release at batch end (releasing per query could evict
-    * another in-flight query's cache mid-run).
+    * latencies. Results keep query order. A query's plan holds all of its
+    * state, so in-flight queries share nothing but the index.
     */
   def searchAll(queries: Seq[(String, String)], numResults: Int,
                 parser: QueryParser, runId: String,
@@ -434,10 +450,7 @@ class Engine(val index: SearchIndex, val model: Model,
           r.getAs[Int]("rank"), r.getAs[Double]("score"), runId)
       }
     if (parallelism <= 1)
-      queries.flatMap { case (qid, q) =>
-        try rowsOf(qid, q)
-        finally releaseCaches() // positional rescoring pins caches per query
-      }
+      queries.flatMap { case (qid, q) => rowsOf(qid, q) }
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
       var wedged = false
@@ -458,12 +471,7 @@ class Engine(val index: SearchIndex, val model: Model,
                 s"query '$qid' exceeded $perQueryTimeout — executor pool wedged?")
           }
         }
-      } finally {
-        if (wedged) pool.shutdownNow() else pool.shutdown()
-        // on ANY exit — completed, failed, or timed out — the finished
-        // queries' pinned positional caches must not outlive the batch
-        releaseCaches()
-      }
+      } finally if (wedged) pool.shutdownNow() else pool.shutdown()
     }
   }
 

@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.model.CollStats
-import graft.query.expressions.DoubleParam
 
 /** Retrieval models. Parameter defaults are the reference baselines
   * (reference: conf/bm25.properties:32-35, conf/indri.properties:24-28).
@@ -14,9 +13,10 @@ case class Indri(lambda: Double = 0.4, mu: Double = 2500.0,
                  wordBasedPrior: Boolean = true) extends Model
 case class Bool(ranked: Boolean = true) extends Model
 
-/** Per-posting scoring, as both driver-side doubles (for default scores and
-  * the test oracle) and Catalyst column expressions (whole-stage-codegen'd
-  * arithmetic over the postings scan — no UDF in the hot path).
+/** Per-posting scoring, as both driver-side doubles (for term parameters,
+  * default scores and the test oracle) and Catalyst column expressions
+  * (whole-stage-codegen'd arithmetic over the postings scan — no UDF in the
+  * hot path).
   *
   * Semantics pinned to the reference termScorers:
   *  - BM25 (reference: yairs/retrieval/BM25Retriever.scala:52-57):
@@ -67,7 +67,8 @@ class Scorer(val model: Model, val stats: CollStats) extends Serializable {
     * [[termScore]]: the same double operations in the same order. The
     * per-term doubles `p` ([[termParams]]) are columns, so every term
     * shares one generated class as long as they reach generated code
-    * through `references` (a [[DoubleParam]] or a literal table lookup),
+    * through `references` (a
+    * [[graft.query.expressions.DoubleParam]] or a literal table lookup),
     * not as inlined literals; per-store constants stay literals.
     */
   def termScoreCol(p: (Column, Column), tf: Column, dl: Column): Column =
@@ -82,15 +83,6 @@ class Scorer(val model: Model, val stats: CollStats) extends Serializable {
         when(w === 0.0, lit(Integer.MIN_VALUE.toDouble)).otherwise(log10(w))
       case Bool(_) => tf.cast("double")
     }
-
-  /** [[termScoreCol]] of a term with collection stats (cf, df), its
-    * doubles passed as [[DoubleParam]]s. The session must be
-    * [[graft.query.expressions.QueryExpressions.prepare]]d.
-    */
-  def termScoreCol(cf: Long, df: Long, tf: Column, dl: Column): Column = {
-    val (p1, p2) = termParams(cf, df)
-    termScoreCol((DoubleParam.column(p1), DoubleParam.column(p2)), tf, dl)
-  }
 
   /** Leaf read-time score (reference scores postings once at scan and
     * reuses them through all merges — InvertedList.scala:148).
@@ -108,5 +100,22 @@ class Scorer(val model: Model, val stats: CollStats) extends Serializable {
   def defaultScore(cf: Long, df: Long): Double = model match {
     case Bool(_) => 0.0
     case _       => termScore(cf, df, 0, avgdl)
+  }
+
+  /** Whether [[defaultScore]] is finite for every (cf, df) a collection
+    * can give, which the model and collection decide alone. BM25's default
+    * is 0·idf / (k1·((1 − b) + b·avgdl/avgdl)) with a finite idf: NaN
+    * exactly when that divisor is 0 or NaN (k1 = 0). Indri's is log10 of
+    * w = λ·μ·prior/(avgdl + μ) + (1 − λ)·prior, or MIN_VALUE at w = 0;
+    * with 0 ≤ λ ≤ 1, a finite μ ≥ 0 and words in the collection, the
+    * prior lies in [0, 1] and w is finite and non-negative.
+    */
+  val defaultsFinite: Boolean = model match {
+    case BM25(k1, b) =>
+      val norm = k1 * ((1 - b) + b * avgdl / avgdl)
+      norm != 0.0 && !norm.isNaN
+    case Indri(lambda, mu, _) =>
+      lambda >= 0 && lambda <= 1 && mu >= 0 && !mu.isInfinite && totalWords > 0
+    case Bool(_) => true
   }
 }

@@ -7,7 +7,7 @@ import graft.corpus.SyntheticCorpus
 import graft.index._
 import graft.model.CollStats
 import graft.query._
-import graft.query.expressions.QueryExpressions
+import graft.query.expressions.{DoubleParam, QueryExpressions}
 
 /** Serving-path generated code depends on a query's shape, not its terms
   * or weights: a shape that ran once hits Spark's codegen cache with any
@@ -51,7 +51,6 @@ class CodegenSpec extends AnyFunSuite {
   private def engineRun(model: Model, op: QOp.Value)(q: String): Unit = {
     val e = new Engine(idx, model)
     e.search(q, 10, new QueryParser(defaultOp = op)).collect()
-    e.releaseCaches()
   }
 
   test("BM25 bag via Wand compiles once per shape") {
@@ -84,6 +83,23 @@ class CodegenSpec extends AnyFunSuite {
   test("#near compiles once per shape") {
     assertStable("near", Seq("#near/2(obama family)", "#near/2(french lick)")) {
       engineRun(BM25(), QOp.SUM)
+    }
+  }
+
+  test("#near/#uw under a merge compile once per shape") {
+    // a virtual term's stats reach its scores and its merge's default as
+    // planned columns, never as literals in generated code
+    assertStable("bm25 #sum(#near)", Seq("#sum(#near/2(obama family) w3)",
+      "#sum(#near/2(french lick) w40)", "#sum(#near/2(lick resort) tree)")) {
+      engineRun(BM25(), QOp.SUM)
+    }
+    assertStable("indri #and(#uw)", Seq("#and(#uw/6(obama family) w3)",
+      "#and(#uw/6(french lick) w40)", "#and(#uw/6(lick resort) tree)")) {
+      engineRun(Indri(), QOp.AND)
+    }
+    assertStable("uw", Seq("#uw/5(obama family)", "#uw/5(french resort)",
+      "#uw/5(family tree)")) {
+      engineRun(Indri(), QOp.AND)
     }
   }
 
@@ -129,8 +145,10 @@ class CodegenSpec extends AnyFunSuite {
     cases.foreach { case (model, stats) =>
       val scorer = new Scorer(model, coll)
       stats.foreach { case (cf, df) =>
+        val (p1, p2) = scorer.termParams(cf, df)
+        val p = (DoubleParam.column(p1), DoubleParam.column(p2))
         val rows = postings.select(col("tf"), col("dl"),
-          scorer.termScoreCol(cf, df, col("tf"), col("dl")).as("score")).collect()
+          scorer.termScoreCol(p, col("tf"), col("dl")).as("score")).collect()
         rows.foreach { r =>
           val (tf, dl, got) = (r.getInt(0), r.getInt(1), r.getDouble(2))
           val want = scorer.termScore(cf, df, tf, dl.toDouble)

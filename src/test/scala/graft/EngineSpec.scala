@@ -125,8 +125,60 @@ class EngineSpec extends AnyFunSuite {
   test("BM25 parameter sweep (k1/b variants) matches oracle") {
     Seq(BM25(0.9, 0.5), BM25(0.0, 0.75), BM25(20.0, 1.0), BM25(1.2, 0.0))
       .foreach { m =>
-        check(m, QOp.SUM, Seq("obama family tree", "w0 w1"), k = 20)
+        check(m, QOp.SUM, Seq("obama family tree", "w0 w1",
+          "#sum(#near/2(family tree) obama)",
+          "#sum(#uw/4(zzzmissing obama) family)"), k = 20)
       }
+  }
+
+  /** Jobs started while `body` runs on this thread (tagged through a local
+    * property; a tagged sentinel job marks when the listener has seen
+    * every earlier event).
+    */
+  private def jobsDuring[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("body") => jobs.incrementAndGet()
+          case Some("sentinel") => seen.countDown()
+          case _ =>
+        }
+    }
+    def tagged[A](phase: String)(f: => A): A = {
+      sc.setLocalProperty(key, phase)
+      try f finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = tagged("body")(body)
+      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (jobs.get, out)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("#near/#uw lowering runs no job and no query leaves a cached frame") {
+    def cachedFrames = org.apache.spark.sql.CachedFrames.count(spark)
+    Seq(BM25() -> QOp.SUM, Indri() -> QOp.AND).foreach { case (model, op) =>
+      val parser = new QueryParser(defaultOp = op)
+      Seq("#near/2(family tree)", "#uw/6(obama family tree)",
+          "#sum(#near/2(family tree) obama)").foreach { q =>
+        val engine = new Engine(index, model)
+        val root = parser.parse(q)
+        index.prefetchStats(engine.collectLeaves(root))
+        val cached = cachedFrames
+        val (jobs, lowered) = jobsDuring(engine.lower(root))
+        assert(jobs == 0, s"[$model] '$q': lowering ran $jobs Spark jobs")
+        assert(engine.search(q, 10, parser).collect().nonEmpty)
+        assert(lowered.df.collect().nonEmpty)
+        assert(cachedFrames == cached,
+          s"[$model] '$q' left ${cachedFrames - cached} cached frames")
+      }
+    }
   }
 
   test("Indri documentBased prior matches oracle") {

@@ -95,11 +95,9 @@ class LeafGroupSpec extends AnyFunSuite {
 
   private def engineTopK(model: Model, op: QOp.Value, q: String,
                          k: Int): List[(Long, Double)] = {
-    val e = new Engine(idx, model)
-    try e.search(q, k, new QueryParser(defaultOp = op)).collect()
+    new Engine(idx, model).search(q, k, new QueryParser(defaultOp = op)).collect()
       .sortBy(_.getAs[Int]("rank"))
       .map(r => (r.getAs[Long]("docId"), r.getAs[Double]("score"))).toList
-    finally e.releaseCaches()
   }
 
   private def checkOracle(model: Model, op: QOp.Value, q: String, k: Int): Unit = {
