@@ -503,7 +503,7 @@ ${one("2", Seq("key", "value"))}"""
     // SDM-shaped nested query (WEIGHT over AND/NEAR/UW).
     GateQuery("q_ir_sdm",
       (s, d) => lowerQ(s, d, Indri(), indriParser,
-        "#weight( 0.8 #and( key value ) 0.1 #and( #near/1( key value ) ) 0.1 #and( #uw/8( key value ) ) )")
+        SdmGen.expand("key value", nearK = 1, uwK = 8))
         .select(col("docId").as("doc_id"),
           round(col("score"), 6).as("score")),
       Some(PositionalSql.sdmOracle("key", "value")))

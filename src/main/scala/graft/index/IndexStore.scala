@@ -805,11 +805,6 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
       f.isDirectory && f.getPath.getName.startsWith("tb="))
   } catch { case NonFatal(_) => termstatsDf.columns.contains("tb") }
   lazy val segmentsDf: DataFrame = spark.read.parquet(s"$dir/segments")
-  /** docId → (url, text, lang); docId-sorted files, so docId range
-    * filters prune row groups. The serving path (snippets) joins top-k
-    * docIds against this with the result side broadcast.
-    */
-  lazy val docmapDf: DataFrame = spark.read.parquet(s"$dir/docmap")
 
   private val statCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]

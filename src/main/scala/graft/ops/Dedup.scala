@@ -347,17 +347,12 @@ object Dedup {
     h
   }
 
-  /** MinHash signatures: sig(i) = min over shingles of mix(hash ^ seed_i).
-    * Computed per-doc in one pass over the per-row distinct-shingle array
-    * (shingleArrays) — signature generation is SHUFFLE-FREE; the only
-    * exchanges in minhashLsh are the banding join itself.
+  /** One document's MinHash signature from its distinct shingles:
+    * sig(i) = min over shingles of mix(hash64(shingle) ^ seed_i), with
+    * seed_i = mix(i + 1).
     */
-  /** The signature kernel shared by the batch UDF and the streaming
-    * row-at-a-time path ([[minhashSigLocal]]) — one definition, so the
-    * two can never drift.
-    */
-  private[graft] def sigFromShingles(shs: Seq[String],
-                                     numHashes: Int): Array[Long] = {
+  private def sigFromShingles(shs: Seq[String],
+                              numHashes: Int): Array[Long] = {
     val base = shs.map(s => hash64(s, 0L)).toArray
     Array.tabulate(numHashes) { i =>
       val seed = mix(i.toLong + 1)
@@ -372,24 +367,11 @@ object Dedup {
     }
   }
 
-  /** Pure-Scala twin of [[minhashSignatures]] for row-at-a-time callers
-    * (the streaming near-dup): same tokenization as `tokensCol`
-    * (lowercase, split non-alnum, drop empties — Locale.ROOT so the
-    * JVM default locale can't bend the casing), same <w-token collapse
-    * and distinct-shingle set as [[shingleArrays]], same hash formula
-    * ([[sigFromShingles]]). Equivalence is pinned by StreamingMinhashSpec
-    * against the batch pipeline on the same corpus.
+  /** MinHash signatures ([[sigFromShingles]]), computed per doc in one
+    * pass over the per-row distinct-shingle array ([[shingleArrays]]) —
+    * signature generation is SHUFFLE-FREE; the only exchanges in
+    * minhashLsh are the banding join itself.
     */
-  def minhashSigLocal(text: String, w: Int = 3,
-                      numHashes: Int = 32): Array[Long] = {
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty)
-    val shs: Seq[String] =
-      if (toks.length < w) Seq(toks.mkString(" "))
-      else toks.sliding(w).map(_.mkString(" ")).toVector.distinct
-    sigFromShingles(shs, numHashes)
-  }
-
   def minhashSignatures(docs: DataFrame, w: Int = 3,
                         numHashes: Int = 32): DataFrame = {
     val sigUdf = udf { (shs: Seq[String]) => sigFromShingles(shs, numHashes) }

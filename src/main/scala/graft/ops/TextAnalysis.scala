@@ -243,38 +243,6 @@ object TextAnalysis {
       round(best, 6).as("score"))
   }
 
-  private lazy val langTrigramSets: Seq[(String, Set[String])] =
-    langTrigrams.map { case (l, ts) => l -> ts.toSet }
-
-  /** Scalar twin of [[langIdNgram]] for per-row seams — the `lang`
-    * argument of [[graft.sources.WarcSource.toPages]] during crawl
-    * ingestion. Prediction-identical to the DataFrame version on ASCII
-    * text (the fixture corpus' alphabet; spec-pinned equivalence):
-    * same tokenization, same padded trigram OCCURRENCE counting, same
-    * argmax with ties to the first profile in order, same `unknown`
-    * only when the padded stream has no trigrams.
-    */
-  def langOf(text: String): String = {
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty)
-    val padded = " " + toks.mkString(" ") + " "
-    val n = padded.length - 2
-    if (n <= 0) return "unknown"
-    var bestLang = "unknown"
-    var bestScore = -1.0
-    langTrigramSets.foreach { case (l, prof) =>
-      var c = 0
-      var i = 0
-      while (i < n) {
-        if (prof.contains(padded.substring(i, i + 3))) c += 1
-        i += 1
-      }
-      val s = c.toDouble / n
-      if (s > bestScore) { bestScore = s; bestLang = l }
-    }
-    bestLang
-  }
-
   /** Winnowing-style document fingerprint: md5 over every w-token shingle,
     * fingerprint = lexicographic min digest. Shingle enumeration is a
     * higher-order `transform` over token offsets — no explode, no shuffle.

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * Versus the Scala UDFs they replace: inputs stay Catalyst `ArrayData`
   * (no per-row conversion to Scala Seq and back), nulls short-circuit in
   * generated code, and the NEAR kernel participates in whole-stage codegen
-  * via a static-call `doGenCode`. Semantics identical to
-  * graft.query.Positional (property-tested against it).
+  * via a static-call `doGenCode`. Semantics are the reference's greedy
+  * advance rules; PositionalSpec property-tests both kernels against the
+  * test oracle's independent copy (graft.oracle.RefOracle).
   */
 object PositionalKernels {
   /** Greedy ordered-window match (StructuredRetriever.scala:179-218

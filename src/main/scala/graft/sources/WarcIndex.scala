@@ -4,7 +4,7 @@ import java.io.InputStream
 import java.util.zip.{CRC32, Inflater}
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * which is what makes point reads possible: an index of
   * `(url, file, offset, length)` lets a consumer fetch one document with
   * one ranged read + one member inflate — the docstore pattern a search
-  * engine needs to serve snippets for top-k results without rescanning
-  * the crawl. This object provides the three pieces:
+  * engine uses to fetch its top-k documents without rescanning the
+  * crawl. This object provides the three pieces:
   *
   *  - [[entries]] — scan `.warc.gz` files and emit one index row per
   *    response record with the member's exact compressed `(offset,
@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   *  - [[buildCdx]] — the entries globally sorted by url (range partition
   *    + within-partition sort: a lookup binary-searches parquet row
   *    groups by min/max url, the same access path a real CDX serves).
-  *  - [[fetchDocs]] / [[readRecordAt]] — point reads. `fetchDocs` joins a
-  *    url set against the index, groups fetches per file, and reads each
-  *    file's members in offset order — sequential I/O per file, one open
-  *    per (task, file), no full-file scan.
+  *  - [[fetchDocs]] — point reads: it joins a url set against the
+  *    index, groups fetches per file, and reads each file's members in
+  *    offset order — sequential I/O per file, one open per (task, file),
+  *    no full-file scan.
   *
   * Scale shape: `entries` is one task per WARC file (same argument as
   * [[WarcSource.read]]); `buildCdx` is one range-partitioned sort of
@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   * Untrusted-input contract: framing violations (bad magic, CRC
   * mismatch, truncated trailer, member over the cap) stop that FILE's
   * scan — offsets past a framing error cannot be trusted — but parsed
-  * entries stand and other files are unaffected; a point read returns
-  * None instead of throwing.
+  * entries stand and other files are unaffected; a point read of a bad
+  * member yields no row instead of throwing.
   */
 object WarcIndex {
 
@@ -126,17 +126,6 @@ object WarcIndex {
       }
       .map(r => (r.url, r.warc_ts, r.html, r.http_status, r.mime))
       .toDF("url", "warc_ts", "html", "http_status", "mime")
-  }
-
-  /** One point read on a driver/executor-local Hadoop path. */
-  def readRecordAt(spark: SparkSession, file: String, offset: Long,
-                   length: Long): Option[WarcSource.WarcRow] = {
-    val p = new Path(file)
-    val fs: FileSystem =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try readMemberAt(in, offset, length).flatMap(recordOf)
-    finally in.close()
   }
 
   /** Ranged read of one gzip member: seek, read `length` bytes, inflate,

@@ -200,5 +200,8 @@ class EngineSpec extends AnyFunSuite {
     // shape sanity: reference sdm.txt:1 spelling (dm.pl emits bigrams
     // last-pair-first; GoldensSpec pins all 30 lines byte-for-byte)
     assert(sdm.startsWith("#weight( 0.8 #and( obama family tree ) 0.1 #and( #near/3( family tree )  #near/3( obama family )"))
+    // the q_ir_sdm gate builds its query with this call: pin its bytes
+    assert(graft.query.SdmGen.expand("key value", nearK = 1, uwK = 8) ==
+      "#weight( 0.8 #and( key value ) 0.1 #and( #near/1( key value ) ) 0.1 #and( #uw/8( key value ) ) )")
   }
 }

@@ -326,36 +326,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("scalar langOf is prediction-identical to langIdNgram") {
-    // hand sentences (incl. empty → unknown) …
-    val samples = Seq(
-      "the quick brown fox jumps over the lazy dog and it was not " +
-        "what they said there would be for all of them",
-      "der schnelle braune fuchs springt mit einem satz durch den " +
-        "wald und sie ist nicht das was wir auch noch werden",
-      "les enfants sont dans une maison avec leur mere et nous " +
-        "avons fait tout cela pour que vous soyez bien sans peur",
-      "los ninos estan en una casa con sus padres y todos tienen " +
-        "este libro para cuando sea muy tarde sobre la mesa",
-      "", "zz")
-    val sdf = samples.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    val dfPred = TextAnalysis.langIdNgram(sdf).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    samples.zipWithIndex.foreach { case (t, i) =>
-      assert(TextAnalysis.langOf(t) == dfPred(i.toLong), s"sample $i")
-    }
-    // … and the whole fixture corpus (the per-row seam must agree with
-    // the gated DataFrame op on every real row)
-    val rows = docs.select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1))
-    val corpusPred = TextAnalysis.langIdNgram(docs).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    rows.foreach { case (id, t) =>
-      assert(TextAnalysis.langOf(t) == corpusPred(id), s"doc $id")
-    }
-  }
-
   test("embedding self-similarity is 1") {
     val self = emb.limit(3).select(col("vec_id"),
       round(Similarity.cosineCol(col("embedding"), col("embedding")), 6)

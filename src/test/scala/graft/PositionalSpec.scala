@@ -4,15 +4,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
-import graft.query.Positional
+import graft.oracle.RefOracle
+import graft.query.BM25
 import graft.query.expressions.PositionalExpressions
 
-/** The native Catalyst expressions must agree with the plain-Scala
-  * reference kernels (graft.query.Positional) on arbitrary inputs, through
-  * the real DataFrame/codegen path.
+/** The native Catalyst expressions must agree with the test oracle's
+  * independent greedy kernels (RefOracle's `nearPositions`/`uwCount`) on
+  * arbitrary inputs, through the real DataFrame/codegen path.
   */
 class PositionalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  // the kernels read no index: an empty one will do
+  val oracle = new RefOracle(Map.empty, RefOracle.collStats(Map.empty), BM25())
 
   def forAll[T](gen: Gen[T], n: Int = 40)(body: T => Unit): Unit =
     (1 to n).foreach(i => gen(Gen.Parameters.default, Seed(i.toLong)).foreach(body))
@@ -35,7 +38,7 @@ class PositionalSpec extends AnyFunSuite {
       val viaExpr = Seq((a, b)).toDF("p1", "p2")
         .select(expr(s"near_matches(p1, p2, $k)")).collect()(0)
         .getSeq[Int](0).toList
-      assert(viaExpr == Positional.nearMatches(a, b, k).toList, s"($a,$b,$k)")
+      assert(viaExpr == oracle.nearPositions(a, b, k), s"($a,$b,$k)")
     }
   }
 
@@ -46,7 +49,7 @@ class PositionalSpec extends AnyFunSuite {
       val viaExpr = Seq((a, b)).toDF("p1", "p2")
         .select(expr(s"near_matches(p1, p2, $k)")).collect()(0)
         .getSeq[Int](0).toList
-      assert(viaExpr == Positional.nearMatches(a, b, k).toList)
+      assert(viaExpr == oracle.nearPositions(a, b, k))
     }
   }
 
@@ -57,7 +60,7 @@ class PositionalSpec extends AnyFunSuite {
       Gen.choose(0, 10)), 25) { case (lists, k) =>
       val viaExpr = Seq(Tuple1(lists)).toDF("ls")
         .select(expr(s"uw_matches(ls, $k)")).collect()(0).getInt(0)
-      assert(viaExpr == Positional.uwMatches(lists, k), s"($lists,$k)")
+      assert(viaExpr == oracle.uwCount(lists, k), s"($lists,$k)")
     }
   }
 

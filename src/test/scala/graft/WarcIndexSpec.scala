@@ -36,6 +36,7 @@ class WarcIndexSpec extends AnyFunSuite {
   }
 
   lazy val idx = WarcIndex.entries(spark, s"$dir/*.warc.gz").collect()
+  lazy val cdx = WarcIndex.buildCdx(WarcIndex.entries(spark, s"$dir/*.warc.gz"))
 
   test("one entry per response record; warcinfo members indexed past") {
     assert(idx.length == N)
@@ -59,22 +60,21 @@ class WarcIndexSpec extends AnyFunSuite {
   }
 
   test("every entry point-reads back byte-identical") {
+    import spark.implicits._
+    val got = WarcIndex.fetchDocs(cdx, idx.map(_.getString(0)).toSeq.toDF("url"))
+      .collect()
+    assert(got.map(_.getString(0)).sorted.toSeq == pages.map(_.url).sorted)
     val byUrl = pages.map(p => p.url -> p).toMap
-    idx.foreach { r =>
-      val rec = WarcIndex.readRecordAt(spark, r.getString(4),
-        r.getLong(5), r.getLong(6))
-      assert(rec.isDefined, r.getString(0))
-      val p = byUrl(rec.get.url)
-      assert(rec.get.url == r.getString(0))
-      assert(java.util.Arrays.equals(rec.get.html, p.html), p.url)
-      assert(rec.get.warc_ts == p.warc_ts)
+    got.foreach { r =>
+      val p = byUrl(r.getString(0))
+      assert(java.util.Arrays.equals(r.getAs[Array[Byte]](2), p.html), p.url)
+      assert(r.getTimestamp(1) == p.warc_ts, p.url)
     }
   }
 
   test("fetchDocs returns exactly the requested urls, byte-identical") {
     import spark.implicits._
     val want = pages.zipWithIndex.collect { case (p, i) if i % 7 == 0 => p }
-    val cdx = WarcIndex.buildCdx(WarcIndex.entries(spark, s"$dir/*.warc.gz"))
     val got = WarcIndex.fetchDocs(cdx, want.map(_.url).toDF("url")).collect()
     assert(got.map(_.getString(0)).sorted.toSeq ==
       want.map(_.url).sorted)

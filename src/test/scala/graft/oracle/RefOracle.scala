@@ -100,7 +100,7 @@ class RefOracle(index: RefOracle.TermIndex, val coll: CollStats,
   }
 
   // --- NEAR (StructuredRetriever.scala:123-218), independent greedy ------
-  private def nearPositions(p1: List[Int], p2: List[Int], k: Int): List[Int] =
+  private[graft] def nearPositions(p1: List[Int], p2: List[Int], k: Int): List[Int] =
     (p1, p2) match {
       case (h1 :: t1, h2 :: t2) =>
         if (h2 >= h1) {
@@ -123,7 +123,7 @@ class RefOracle(index: RefOracle.TermIndex, val coll: CollStats,
   }
 
   // --- UW (MultimergeSturctured…:108-232), independent sweep -------------
-  private def uwCount(lists: List[List[Int]], k: Int): Int = {
+  private[graft] def uwCount(lists: List[List[Int]], k: Int): Int = {
     var cur = lists.map(_.toArray)
     val idx = Array.fill(cur.length)(0)
     var matches = 0

@@ -1,5 +1,6 @@
-"""Unit tests of the unreferenced-name lister on a small fixture tree (no
-Spark):
+"""Unit tests of the unreferenced-name lister on a small fixture tree, and
+a check that no top-level object of this repository's src/main is reached
+only from its own unit test (no Spark):
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -123,6 +124,17 @@ class SplitSourceTest(unittest.TestCase):
         self.assertNotIn("{", code)
         self.assertIn('"{x}"', words)
         self.assertNotIn("/*", words)
+
+
+class RepoTest(unittest.TestCase):
+    def test_no_top_level_object_is_reached_only_from_tests(self):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        only_tested = []
+        for path, line, kind, name, own, _ in unreferenced.unreferenced(root):
+            text = unreferenced.read(root, path).split("\n")[line - 1]
+            if kind == "object" and own == 0 and not text[:1].isspace():
+                only_tested.append(f"{path}:{line} {name}")
+        self.assertEqual(only_tested, [])
 
 
 if __name__ == "__main__":
