@@ -17,8 +17,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_ir_bm25_topk")(spark, "/root/testdata/sf0.001")
 
+  /** Gate name → query. Each call first installs the engine's functions
+    * on the session it is handed ([[GraftExtensions.install]]), which may
+    * be one the library did not build.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gateQueries.map(q => q.name -> q.fn).toMap
+    gateQueries.map(q => q.name -> { (spark: SparkSession, sfDir: String) =>
+      GraftExtensions.install(spark)
+      q.fn(spark, sfDir)
+    }).toMap
 
   def oracleSql: Map[String, String] =
     gateQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap

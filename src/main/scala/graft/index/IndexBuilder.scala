@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Tokenizer
 import graft.model._
-import graft.query.expressions.{InValues, QueryExpressions}
+import graft.query.expressions.InValues
 
 /** One (docId, field, text) unit to index. A document contributes one row
   * per field (default/title/body/url — reference field layout:
@@ -307,8 +307,14 @@ object IndexBuilder {
   }
 }
 
-/** Query-side view of an index: postings point-lookups plus stats. */
-trait SearchIndex {
+/** Query-side view of an index: postings point-lookups plus stats.
+  * Constructing one installs the engine's functions on its session
+  * ([[graft.GraftExtensions.install]]), so every query that reads through
+  * an index finds them.
+  */
+abstract class SearchIndex(spark: SparkSession) {
+  graft.GraftExtensions.install(spark)
+
   /** Warm the stat cache for a batch of (term, field) pairs in one pass
     * (default: no-op; ParquetIndex overrides with a single pruned scan so
     * an n-term query costs one stats job, not n).
@@ -338,7 +344,8 @@ trait SearchIndex {
 
 /** SearchIndex over in-memory cached DataFrames. */
 class DfIndex(val postingsDf: DataFrame, val termStatsDf: DataFrame,
-              val collStats: CollStats) extends SearchIndex {
+              val collStats: CollStats)
+    extends SearchIndex(postingsDf.sparkSession) {
   private val statCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]
 
@@ -358,7 +365,6 @@ class DfIndex(val postingsDf: DataFrame, val termStatsDf: DataFrame,
   }
 
   def postings(pairs: Seq[(String, String)]): DataFrame = {
-    QueryExpressions.prepare(postingsDf.sparkSession)
     val ps = pairs.distinct
     // the term set first: it rejects most rows before the pair check
     postingsDf.filter(InValues.column(col("term"), ps.map(_._1).distinct) &&

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
 import graft.model._
-import graft.query.expressions.{InValues, QueryExpressions}
+import graft.query.expressions.InValues
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, NoSuchFileException, StandardCopyOption}
 import scala.util.control.NonFatal
@@ -790,7 +790,7 @@ case class SegmentRow(term: String, field: String, bucket: Int, n: Int,
   * (field, tb) directories, then decode segment blobs to posting rows.
   */
 class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
-    extends SearchIndex {
+    extends SearchIndex(spark) {
 
   private lazy val termstatsDf = spark.read.parquet(s"$dir/termstats")
   /** Stores written before the tb partition column existed stay readable.
@@ -843,7 +843,6 @@ class ParquetIndex(spark: SparkSession, dir: String, termBuckets: Int)
     * not depend on how many pairs a batch has.
     */
   def segmentsOf(pairs: Seq[(String, String)]): DataFrame = {
-    QueryExpressions.prepare(spark)
     val ps = pairs.distinct
     segmentsDf.filter(
       InValues.column(col("field"), ps.map(_._2).distinct) &&

@@ -78,7 +78,7 @@ object InvFormat {
   */
 class InvIndex(spark: SparkSession, basename: String,
                val collStats: CollStats, defaultField: String = "default",
-               hw2Layout: Boolean = true) extends SearchIndex {
+               hw2Layout: Boolean = true) extends SearchIndex(spark) {
 
   private val headerCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]

@@ -20,8 +20,6 @@ object Sampling {
   /** splitmix64 finalizer over a long column (== SyntheticCorpus.mix), as
     * the native Splitmix64Expr — Column-level long multiplication throws
     * under Spark 4's default ANSI mode, and a mixer needs wraparound.
-    * Callers must have run HashExpressions.register(session) first (the
-    * public entry points below do).
     */
   def mix64(x: Column): Column = call_function("splitmix64", x)
 
@@ -38,7 +36,6 @@ object Sampling {
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
                        rates: Map[String, Double], defaultRate: Double,
                        seed: Long): DataFrame = {
-    graft.functions.HashExpressions.register(df.sparkSession)
     val rate = rates.foldLeft(lit(defaultRate)) { case (acc, (k, r)) =>
       when(col(stratumCol) === k, lit(r)).otherwise(acc)
     }
@@ -59,7 +56,6 @@ object Sampling {
     * oracle) order identically.
     */
   def shuffleOrder(df: DataFrame, idCol: String, seed: Long): DataFrame = {
-    graft.functions.HashExpressions.register(df.sparkSession)
     val spark = df.sparkSession
     val keyed = df.withColumn("__shufkey",
       mix64(col(idCol).cast("long").bitwiseXOR(lit(seed))))
@@ -84,7 +80,6 @@ object Sampling {
   def mixtureSample(df: DataFrame, idCol: String, stratumCol: String,
                     weights: Map[String, Double], defaultWeight: Double,
                     seed: Long): DataFrame = {
-    graft.functions.HashExpressions.register(df.sparkSession)
     val w = weights.foldLeft(lit(defaultWeight)) { case (acc, (k, r)) =>
       when(col(stratumCol) === k, lit(r)).otherwise(acc)
     }

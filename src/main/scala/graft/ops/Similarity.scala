@@ -28,21 +28,13 @@ object Similarity {
     * sequential in index order (doubles), matching the DuckDB oracle's
     * unnest-ordinality sum bit-for-bit at 6dp rounding.
     */
-  def cosineCol(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.VectorExpressions.register)
-    call_function("cosine_f", a, b)
-  }
+  def cosineCol(a: Column, b: Column): Column = call_function("cosine_f", a, b)
 
   /** Cosine over byte-packed int8-quantized vectors (native codegen
     * expression; the per-vector scales cancel, so it is exact integer
     * arithmetic).
     */
-  def cosineQ8Col(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.VectorExpressions.register)
-    call_function("cosine_q8", a, b)
-  }
+  def cosineQ8Col(a: Column, b: Column): Column = call_function("cosine_q8", a, b)
 
   /** The int8 array for a float embedding column given its (raw)
     * per-vector scale — the single quantization formula shared by the

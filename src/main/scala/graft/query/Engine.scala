@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
 import graft.index.SearchIndex
-import graft.query.expressions.{DoubleParam, QueryExpressions}
+import graft.query.expressions.DoubleParam
 
 /** Query evaluation: lowers the parsed AST to declarative DataFrame plans.
   *
@@ -318,12 +318,7 @@ class Engine(val index: SearchIndex, val model: Model,
     * (the root, or a #NEAR child, whose join fold takes one list at a
     * time) is a group of one.
     */
-  def lower(node: QNode): Lowered = {
-    QueryExpressions.prepare(spark)
-    lowerNode(node)
-  }
-
-  private def lowerNode(node: QNode): Lowered = node match {
+  def lower(node: QNode): Lowered = node match {
     case l: QLeaf =>
       // a group of one feeds a #NEAR join or the ranking, not a merge: no
       // union, so the planner still sees the scan's size and can
@@ -350,10 +345,10 @@ class Engine(val index: SearchIndex, val model: Model,
     def unsupported(what: String) =
       throw new UnsupportedOperationException(s"$model does not support $what")
     node.op match {
-      case QOp.NEAR => near(kept.map(lowerNode), node.prox)
+      case QOp.NEAR => near(kept.map(lower), node.prox)
       // a one-child Boolean merge passes its child through unmerged
       case QOp.OR | QOp.AND | QOp.SUM if n == 1 && model.isInstanceOf[Bool] =>
-        lowerNode(kept.head)
+        lower(kept.head)
       case op =>
         val c = children(kept, weights)
         op match {

@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{Codec, ParquetIndex}
-import graft.query.expressions.QueryExpressions
 
 /** Block-max WAND top-k for flat BM25 bag-of-words queries — the fast
   * access path of the north rule (the exact union+groupBy path stays the
@@ -228,7 +227,6 @@ object Wand {
     // reference sweep quirk); WAND's union-with-zero-default assumption
     // only holds for k1 > 0
     require(model.k1 > 0, "WAND path requires k1 > 0 (finite defaults)")
-    QueryExpressions.prepare(spark)
     import spark.implicits._
     val coll = index.collStats
     val n = coll.docCount.toDouble

@@ -1,6 +1,5 @@
 package graft.query.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -155,17 +154,4 @@ case class UwMatchesExpr(lists: Expression, k: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(lists = newLeft, k = newRight)
-}
-
-object PositionalExpressions {
-  /** Register near_matches / uw_matches in the session's function registry
-    * (idempotent) so plans can reference them via expr("near_matches(…)").
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("near_matches",
-      exprs => NearMatchesExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("uw_matches",
-      exprs => UwMatchesExpr(exprs(0), exprs(1)), "scala_udf")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.query.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -30,12 +30,13 @@ case class DoubleParam(value: Double) extends LeafExpression {
 }
 
 object DoubleParam {
-  private[expressions] val Name = "graft_double_param"
+  private[graft] val Name = "graft_double_param"
 
-  /** `value` as a column; the session must be [[QueryExpressions.prepare]]d. */
+  /** `value` as a column; the session must have the engine's functions
+    * ([[graft.GraftExtensions.install]]). */
   def column(value: Double): Column = call_function(Name, lit(value))
 
-  private[expressions] def build(args: Seq[Expression]): Expression = args match {
+  private[graft] def build(args: Seq[Expression]): Expression = args match {
     case Seq(Literal(v: Double, DoubleType)) => DoubleParam(v)
     case _ => throw new IllegalArgumentException(
       s"$Name expects one double literal, got ${args.mkString(", ")}")
@@ -49,13 +50,14 @@ object DoubleParam {
   * down to parquet as `In`.
   */
 object InValues {
-  private[expressions] val Name = "graft_in_values"
+  private[graft] val Name = "graft_in_values"
 
-  /** `child IN values`; the session must be [[QueryExpressions.prepare]]d. */
+  /** `child IN values`; the session must have the engine's functions
+    * ([[graft.GraftExtensions.install]]). */
   def column[T: TypeTag](child: Column, values: Seq[T]): Column =
     call_function(Name, child, typedLit(values))
 
-  private[expressions] def build(args: Seq[Expression]): Expression = args match {
+  private[graft] def build(args: Seq[Expression]): Expression = args match {
     case Seq(child, Literal(values: ArrayData, ArrayType(et, _)))
         if DataType.equalsStructurally(child.dataType, et, ignoreNullability = true) =>
       // always a HashSet: generated code casts the set to its runtime
@@ -63,27 +65,5 @@ object InValues {
       InSet(child, HashSet.from(values.toArray[Any](et)))
     case _ => throw new IllegalArgumentException(
       s"$Name expects a column and an array literal of its type, got ${args.mkString(", ")}")
-  }
-}
-
-object QueryExpressions {
-  private val UseIdInClassName = "spark.sql.codegen.useIdInClassName"
-
-  /** Ready `spark` to serve queries (idempotent; [[graft.query.Engine]],
-    * [[graft.query.Wand]] and the indexes' postings lookups call it per
-    * query): registers the positional kernels, [[DoubleParam]] and
-    * [[InValues]], and drops the stage id from generated class names.
-    * Spark names each whole-stage class after its stage id, so the same
-    * leaf-scan code at another union position would otherwise be a
-    * distinct class and compile again. Only class names change.
-    */
-  def prepare(spark: SparkSession): Unit = {
-    if (spark.conf.get(UseIdInClassName, "true") != "false")
-      spark.conf.set(UseIdInClassName, "false")
-    PositionalExpressions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DoubleParam.Name, DoubleParam.build, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      InValues.Name, InValues.build, "scala_udf")
   }
 }

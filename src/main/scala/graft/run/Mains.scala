@@ -13,18 +13,29 @@ import scala.util.control.NonFatal
   * RetrieverRunner.main — yairs/eval/RetrieverRunner.scala:21-53).
   */
 object Mains {
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder().appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+  /** `SPARK_GRAFT_CPUS`, else the cores this JVM sees. */
+  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** The one session conf of the library's mains and tests, with the
+    * engine's functions as a session extension ([[graft.GraftExtensions]]).
+    * `withExtensions` rather than `spark.sql.extensions`, so a user's own
+    * extensions survive. The master is spark-submit's when it set one,
+    * else `local[cpus]`; callers may add keys before `getOrCreate`.
+    */
+  def builder(appName: String, cpus: Int = defaultCpus): SparkSession.Builder =
+    SparkSession.builder().appName(appName)
+      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val withMaster =
-      if (sys.env.contains("SPARK_GRAFT_LOCAL")) b.master(s"local[$cpus]")
-      else b.master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
-    val s = withMaster.getOrCreate()
+      .config(graft.GraftExtensions.UseIdInClassName, "false")
+      .withExtensions(new graft.GraftExtensions)
+
+  def session(appName: String, cpus: Int = defaultCpus): SparkSession = {
+    val s = builder(appName, cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -226,8 +237,7 @@ object BuildProf {
         val Array(ex, co) = level.split('x').map(_.toInt)
         (s"local-cluster[$ex,$co,6144]", ex * co)
       } else (s"local[${level.toInt}]", level.toInt)
-      val builder0 = org.apache.spark.sql.SparkSession.builder()
-        .master(master).appName(s"graft-prof-$level")
+      val builder0 = Mains.builder(s"graft-prof-$level", cpus).master(master)
       // local-cluster forks real executor JVMs: ship the app jar to them
       val builder = if (master.startsWith("local-cluster"))
         builder0.config("spark.jars", sys.env.getOrElse("SPARK_GRAFT_JAR",
@@ -237,11 +247,7 @@ object BuildProf {
           .config("spark.executor.extraJavaOptions", "-XX:ActiveProcessorCount=4 -Xms5g -XX:+AlwaysPreTouch")
       else builder0
       val spark = builder
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.local.dir", s"$base/shuffle-$cpus")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       // per-stage utilization: task-time vs wall tells barrier/straggler

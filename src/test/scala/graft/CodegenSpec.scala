@@ -7,7 +7,7 @@ import graft.corpus.SyntheticCorpus
 import graft.index._
 import graft.model.CollStats
 import graft.query._
-import graft.query.expressions.{DoubleParam, QueryExpressions}
+import graft.query.expressions.DoubleParam
 
 /** Serving-path generated code depends on a query's shape, not its terms
   * or weights: a shape that ran once hits Spark's codegen cache with any
@@ -138,7 +138,6 @@ class CodegenSpec extends AnyFunSuite {
     Indri(0.7, 1500.0, wordBasedPrior = false) -> Seq((0L, 0L), (33L, 21L)))
 
   private def assertBitIdentical(): Unit = {
-    QueryExpressions.prepare(spark)
     val postings = spark.range(0, 2000).select(
       (col("id") % 41).cast("int").as("tf"),
       (col("id") * 7919 % 1999 + 1).cast("int").as("dl"))

@@ -6,7 +6,6 @@ import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
 import graft.oracle.RefOracle
 import graft.query.BM25
-import graft.query.expressions.PositionalExpressions
 
 /** The native Catalyst expressions must agree with the test oracle's
   * independent greedy kernels (RefOracle's `nearPositions`/`uwCount`) on
@@ -32,7 +31,6 @@ class PositionalSpec extends AnyFunSuite {
       (List(10), List(1), 5),
       (List(), List(1, 2), 3),
       (List(1, 4), List(2, 3, 5), 1))
-    PositionalExpressions.register(spark)
     import spark.implicits._
     cases.foreach { case (a, b, k) =>
       val viaExpr = Seq((a, b)).toDF("p1", "p2")
@@ -43,7 +41,6 @@ class PositionalSpec extends AnyFunSuite {
   }
 
   test("near_matches expression == reference kernel (random, via DataFrame)") {
-    PositionalExpressions.register(spark)
     import spark.implicits._
     forAll(Gen.zip(posGen, posGen, Gen.choose(0, 6)), 25) { case (a, b, k) =>
       val viaExpr = Seq((a, b)).toDF("p1", "p2")
@@ -54,7 +51,6 @@ class PositionalSpec extends AnyFunSuite {
   }
 
   test("uw_matches expression == reference kernel (random, via DataFrame)") {
-    PositionalExpressions.register(spark)
     import spark.implicits._
     forAll(Gen.zip(Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, posGen)),
       Gen.choose(0, 10)), 25) { case (lists, k) =>
@@ -65,7 +61,6 @@ class PositionalSpec extends AnyFunSuite {
   }
 
   test("null inputs yield null, not a crash") {
-    PositionalExpressions.register(spark)
     val row = spark.sql("SELECT near_matches(NULL, array(1), 2) a, " +
       "uw_matches(NULL, 2) b").collect()(0)
     assert(row.isNullAt(0) && row.isNullAt(1))

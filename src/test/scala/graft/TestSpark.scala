@@ -4,13 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("yairsspark-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = graft.run.Mains.session("yairsspark-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -2,11 +2,17 @@
 """Local stand-in for the driver's correctness gate: run Verify's parquet
 dumps against the DuckDB oracle SQL and diff values (column-name sorted,
 row-sorted)."""
-import sys, json, glob, math
-import duckdb
+import argparse, sys, json, glob, math
 
-sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_r1"
+ap = argparse.ArgumentParser(description=__doc__)
+ap.add_argument("sfdir", nargs="?", default="/root/testdata/sf0.001",
+                help="scale-factor directory of the input parquet tables")
+ap.add_argument("outdir", nargs="?", default="/tmp/verify_r1",
+                help="graft.Verify's output directory")
+args = ap.parse_args()
+sfdir, outdir = args.sfdir, args.outdir
+
+import duckdb  # after parsing, so --help needs no DuckDB
 
 con = duckdb.connect()
 for t in ["documents", "embeddings", "lineitem", "orders", "customer",
